@@ -60,6 +60,38 @@ EXCLUDED_RULES = ",".join(
 _ID_RE = re.compile(r"#\d+|plan_id=\d+|Statistics\([^)]*\)")
 
 
+def _short(rule: str) -> str:
+    """Display name of a rule class (its last dotted component)."""
+    return rule.rsplit(".", 1)[-1]
+
+
+# "<rule class>  <effective ns> / <total ns>  <eff runs> / <runs>"
+# (QueryExecutionMetering column order: Effective X / Total X)
+_DUMP_RE = re.compile(r"(\S+)\s+(\d+)\s*/\s*(\d+)\s+(\d+)\s*/\s*(\d+)\s*$")
+
+
+def rule_profile(dump: str, candidates: set[str]) -> tuple[dict, int]:
+    """Time and run counts of each candidate rule in a
+    ``RuleExecutor.dumpTimeSpent()`` dump, keyed by FULL class name
+    (Spark ships same-named rules in different packages, e.g. two
+    SchemaPruning variants), plus the total time in ns of all rules."""
+    profile = {}
+    total_ns = 0
+    for line in dump.splitlines():
+        m = _DUMP_RE.match(line.strip())
+        if not m:
+            continue
+        name, _eff_ns, tot, eff_runs, runs = m.groups()
+        total_ns += int(tot)
+        if name in candidates:
+            profile[name] = {
+                "total_ms": round(int(tot) / 1e6, 1),
+                "runs": int(runs),
+                "effective_runs": int(eff_runs),
+            }
+    return profile, total_ns
+
+
 def _normalized_plan(df) -> str:
     """explain('formatted') with expr-ids / plan-ids / stats stripped."""
     plan = df._sc._jvm.PythonSQLUtils.explainString(
@@ -106,41 +138,19 @@ def main() -> None:
     rule_exec.resetMetrics()
     suite_once()
     dump = rule_exec.dumpTimeSpent()
-    # ADVICE r14: match on FULL class names (Spark ships same-named
-    # rules in different packages, e.g. two SchemaPruning variants) —
-    # short names could mis-attribute a candidate in the receipt.
+    # ADVICE r14: candidates are matched and keyed by full class name;
+    # names are shortened only for printing.
     candidates = set(EXCLUDED_RULES.split(","))
-    profile = {}
-    total_ns = 0
-    for line in dump.splitlines():
-        # "<rule class>  <effective ns> / <total ns>  <eff runs> / <runs>"
-        # (QueryExecutionMetering column order: Effective X / Total X)
-        m = re.match(
-            r"(\S+)\s+(\d+)\s*/\s*(\d+)\s+(\d+)\s*/\s*(\d+)\s*$", line.strip()
-        )
-        if not m:
-            continue
-        name, _eff_ns, tot, eff_runs, runs = m.groups()
-        total_ns += int(tot)
-        if name in candidates:
-            profile[name.rsplit(".", 1)[-1]] = {
-                "total_ms": round(int(tot) / 1e6, 1),
-                "runs": int(runs),
-                "effective_runs": int(eff_runs),
-            }
+    profile, total_ns = rule_profile(dump, candidates)
     # ADVICE r14: the zero-effective gate must not pass VACUOUSLY — if
     # the dump format drifted or a candidate never appears in the
     # metering map, `all()` over a partial profile would print a clean
     # receipt with 0 ms candidates. Require every candidate parsed.
     if len(profile) != len(candidates):
-        missing = sorted(
-            c.rsplit(".", 1)[-1]
-            for c in candidates
-            if c.rsplit(".", 1)[-1] not in profile
-        )
+        missing = sorted(c for c in candidates if c not in profile)
         print(
             f"# ABORT: rule-time profile incomplete — candidates absent "
-            f"from dumpTimeSpent: {missing}",
+            f"from dumpTimeSpent: {[_short(c) for c in missing]}",
             file=sys.stderr,
         )
         print(
@@ -160,7 +170,7 @@ def main() -> None:
         file=sys.stderr,
     )
     for k, v in sorted(profile.items()):
-        print(f"#   {k}: {v}", file=sys.stderr)
+        print(f"#   {_short(k)}: {v}", file=sys.stderr)
     if not noneffective:
         print(
             "# ABORT: a candidate rule had effective runs on this "
@@ -203,13 +213,12 @@ def main() -> None:
     suite_once()
     on_dump = rule_exec.dumpTimeSpent()
     spark.conf.unset("spark.sql.optimizer.excludedRules")
-    leaked = []
-    for line in on_dump.splitlines():
-        m = re.match(
-            r"(\S+)\s+(\d+)\s*/\s*(\d+)\s+(\d+)\s*/\s*(\d+)\s*$", line.strip()
-        )
-        if m and m.group(1) in candidates and int(m.group(5)) > 0:
-            leaked.append(f"{m.group(1).rsplit('.', 1)[-1]}:{m.group(5)}")
+    on_profile, _ = rule_profile(on_dump, candidates)
+    leaked = [
+        f"{_short(name)}:{p['runs']}"
+        for name, p in sorted(on_profile.items())
+        if p["runs"] > 0
+    ]
     if leaked:
         print(
             f"# ABORT: exclusion ignored for {leaked} — the ON leg "
