@@ -25,666 +25,45 @@ def entry(spark: SparkSession) -> DataFrame:
     return registry["agg_pricing_summary"].spark_fn(spark, "/root/testdata/sf0.001")
 
 
-# Round-1 driver grading covered exactly the first 50 keys of queries()
-# iteration order, leaving 51 operators with no hard verification
-# (VERDICT.md "Next round" item 1). The registry itself is unordered by
-# contract; this explicit priority list rotates the round-1-ungraded
-# operators (plus the fixed dedup_simhash) into the 50-slot window:
-# slots 1-47 the ungraded hash-checkable ops, 48 dedup_simhash,
-# 49-50 the two ungraded rows-only ops. The remaining two rows-only ops
-# (sink_parquet_partitioned, source_csv_roundtrip) sit at 51-52, first
-# in line for a round-3 rotation; round-1 PASS ops follow.
-_GRADING_PRIORITY = [
-    "json_get",
-    "array_explode_tokens",
-    "array_funcs",
-    "array_higher_order",
-    "json_map_funcs",
-    "regexp_extract_all_counts",
-    "scan_parquet",
-    "scan_parquet_pushdown",
-    "scan_partition_pruned",
-    "join_dynamic_partition_pruning",
-    "set_union_all",
-    "set_intersect",
-    "set_except",
-    "dedup_exact",
-    "knn_lsh_bucketed",
-    "knn_ivf_coarse",
-    "knn_ivf_kmeans",
-    "knn_lsh_multiprobe",
-    "sort_multikey",
-    "limit_global_topk",
-    "text_langid_ngram",
-    "text_quality_score",
-    "text_token_count_bpe",
-    "text_fingerprint_rolling",
-    "text_tfidf_topk",
-    "text_normalize_hash",
-    "stream_tumbling_1h",
-    "stream_sliding_1h_15m",
-    "stream_session_30m",
-    "stream_ohlc_bars",
-    "bidask_effective_spread",
-    "dq_checks",
-    "observe_pipeline_metrics",
-    "cache_reuse_two_aggs",
-    "udf_python_scalar",
-    "udaf_grouped_pandas",
-    "udtf_explode_like",
-    "udtf_python_ngrams",
-    "udaf_cogrouped_pandas",
-    "win_topk_per_group",
-    "win_lag_spread",
-    "win_moving_avg",
-    "win_rank_dense_ntile",
-    "win_range_frame",
-    "win_time_range_frame",
-    "stream_stateful_running_agg",
-    "stream_foreachbatch_compact",
-    "dedup_simhash",
-    "stream_watermark_dedup",
-    "etl_star_pipeline",
-    "sink_parquet_partitioned",
-    "source_csv_roundtrip",
-]
+def _grading_record() -> tuple[dict[str, list[int]], set[str]]:
+    """One pass over the CORRECTNESS_r*.json files in the repo root (next
+    to this file, where the driver writes them). Returns
 
-
-# Operators added DURING round 4, after the round-4 window was planned.
-# Never-graded keys tie on (grade count 0) with the 46 pre-existing
-# never-graded ops and would interleave alphabetically, displacing some
-# of them from the 50-slot window; deferring the new ones keeps the
-# planned round-4 window intact — they grade in round 5 instead.
-_DEFER_NEW_R4 = [
-    "q7_nation_pair_volume",
-    "q8_market_share",
-    "q13_order_count_distribution",
-    "q17_small_quantity_revenue",
-    "q21_sole_late_supplier",
-    "win_yoy_nation_revenue",
-    "agg_median_abs_deviation",
-    "knn_range_search",
-    "text_chunk_overlap_stride",
-    "sample_negative_pairs",
-    "q15_top_supplier",
-    "q9_profit_by_nation_year",
-    "stream_sliding_append_closed",
-    "join_asof_tolerance",
-    "win_drawdown_max",
-    "win_streak_longest",
-    "agg_hll_partial_merge",
-    "agg_kll_quantile_merge",
-    "agg_theta_audience_overlap",
-    "stream_interval_join_outer",
-    "embed_power_iteration",
-    "bidask_twa_quote",
-    "sql_identifier_groupby_all",
-    "scan_csv_permissive_corrupt",
-    "stream_dedup_within_watermark",
-    "udtf_dynamic_analyze",
-    "join_lateral_topn_per_key",
-    "win_interval_range_frame",
-    "agg_histogram_width_bucket",
-]
-
-
-# Operators added during round 5. Same rationale as _DEFER_NEW_R4, one
-# round later: the 27 round-4 keys above are the only never-driver-graded
-# ops and MUST occupy window slots 1-27 in round 5 (VERDICT r4 item 1);
-# these 23 sort after them (slots 28-50), so the round-5 window grades
-# the complete surface: every old key keeps its green grade, every new
-# key gets its first one, and nothing displaces the 27.
-_DEFER_NEW_R5 = [
-    "q2_min_cost_supplier",
-    "q11_important_stock",
-    "q16_supplier_part_types",
-    "q20_promotion_part_suppliers",
-    "agg_skew_kurtosis_exact",
-    "subquery_in_any_all",
-    "sql_pivot_dynamic_values",
-    "join_interval_overlap_bucketed",
-    "agg_bitmap_distinct_rollup",
-    "text_entropy_token",
-    "text_repetition_dup_ngram",
-    "dedup_minhash_est_error",
-    "sample_reservoir_per_key",
-    "corpus_source_quota_cap",
-    "text_winsorize_quality",
-    "text_ngram_topk_per_lang",
-    "corpus_quality_composite_filter",
-    "bidask_ofi_hourly",
-    "win_gap_fill_locf",
-    "cep_pattern_absence",
-    "win_rolling_corr_24h",
-    "win_pattern_vshape",
-    "bidask_quote_staleness",
-]
-
-
-# Wave B, activated in round 6: the 50 staged_r6/staged_r6b operators.
-# All 50 are never-driver-graded, so they occupy the entire round-6
-# 50-slot window (everything previously registered has a green r1-r5
-# grade and rotates behind them). Listed explicitly so the window
-# composition is deterministic and guard-testable, like the earlier
-# waves; ordering within the wave puts the JSON-ingest structural fix
-# first (VERDICT r5 item 3: lead with etl_json_ingest_normalize).
-_DEFER_NEW_R6 = [
-    "etl_json_ingest_normalize",
-    "agg_bitmap_rollup_multigrain",
-    "anomaly_winsorized_zscore",
-    "sessionize_cross_device",
-    "bidask_l2_depth_imbalance",
-    "udtf_table_argument",
-    "corpus_cross_lingual_contamination",
-    "etl_incremental_materialize",
-    "text_zipf_fit",
-    "corpus_dedup_cluster_stats",
-    "sample_importance_reweight",
-    "bidask_returns_acf",
-    "bidask_volume_clock",
-    "dq_freshness_sla",
-    "join_asof_nearest",
-    "set_intersect_except_all",
-    "scan_metadata_columns",
-    "text_vocab_overlap_matrix",
-    "corpus_ngram_novelty_rate",
-    "multimodal_shard_manifest",
-    "join_dim_snapshot_asof",
-    "win_first_touch_attribution",
-    "etl_late_arriving_dim_repair",
-    "graph_triangle_count",
-    "win_median_sliding_hourly",
-    "text_code_detect_heuristic",
-    "bidask_tick_rule_signed_volume",
-    "dedup_cross_source_exact",
-    "orders_market_basket_lift",
-    "win_rank_migration",
-    "embed_class_separation",
-    "win_share_of_parent_nested",
-    "q6_sensitivity_whatif",
-    "date_spine_business_days",
-    "agg_funnel_time_to_convert",
-    "orders_cohort_retention",
-    "orders_rfm_segments",
-    "cep_transition_matrix",
-    "events_active_users_rolling",
-    "agg_pareto_cumshare",
-    "agg_gini_concentration",
-    "agg_concurrent_intervals",
-    "orders_revenue_bridge",
-    "dq_cusum_shift_detect",
-    "events_seasonality_profile",
-    "bidask_roll_spread",
-    "agg_histogram_equi_depth",
-    "agg_heavy_hitters_cms",
-    "join_bitemporal_pit",
-    "agg_ols_normal_equations",
-]
-
-
-# Wave C, activated in round 7: the 50 staged_r7 operators. All 50 are
-# never-driver-graded, so they occupy the entire round-7 50-slot window.
-# Ordering puts the two ADVICE-review bug fixes first (k-core keep-set
-# census, seasonal-index integral decimal div — both fixed in round 6
-# with pinned counter-examples) so their first driver grades double as
-# fix verification; the rest follow in staged insertion order.
-_DEFER_NEW_R7 = [
-    "graph_kcore_peel",
-    "orders_seasonal_index_monthly",
-    "sample_largest_remainder_alloc",
-    "dq_benford_first_digit",
-    "join_exists_flag_mark",
-    "win_bollinger_bands",
-    "win_drawdown_duration",
-    "agg_corr_matrix_pairwise",
-    "bidask_kyle_lambda_daily",
-    "embed_hubness_reverse_knn",
-    "text_readability_score",
-    "etl_compaction_plan",
-    "sql_window_clause_shared",
-    "dq_duplicate_payment_detect",
-    "cep_top_paths",
-    "orders_sla_breach_by_priority",
-    "bidask_bar_resample_check",
-    "parts_abc_xyz_matrix",
-    "graph_link_prediction_jaccard",
-    "sample_purged_time_folds",
-    "stream_topk_per_window",
-    "etl_lineage_provenance_hash",
-    "etl_merkle_reconcile",
-    "subquery_correlated_scalar",
-    "pivot_multi_metric",
-    "bidask_quote_trade_ratio",
-    "embed_drift_split_halves",
-    "ts_seasonal_naive_residuals",
-    "dedup_incremental_batch",
-    "text_boilerplate_prefix_detect",
-    "events_lifecycle_stages",
-    "orders_aging_buckets",
-    "dq_categorical_entropy",
-    "embed_norm_histogram",
-    "graph_degree_distribution",
-    "bidask_market_beta_per_user",
-    "orders_fill_rate",
-    "events_power_user_curve",
-    "merge_upsert_scd3",
-    "dq_key_gap_detect",
-    "graph_clustering_coefficient",
-    "dq_split_leakage_check",
-    "dedup_lsh_band_sweep",
-    "dq_orphan_rate_monthly",
-    "orders_mix_shift_yoy",
-    "events_cumulative_uniques",
-    "text_unicode_profile",
-    "events_hazard_curve",
-    "etl_retention_prune_plan",
-    "dq_bot_regularity_detect",
-]
-
-
-# Wave D, activated in round 8: the 50 staged_r8 operators (the
-# ML-evaluation / feature-engineering surface). All 50 are
-# never-driver-graded, so they occupy the entire round-8 50-slot
-# window. Ordering puts the two re-planned fact-grain ops first
-# (lift/gain deciles and Spearman-vs-time — both decomposed from a
-# global rank window into grid-cumulative + within-cell rank per
-# SCALE.md §26, with the plain window SQL kept as the oracle) so
-# their first driver grades double as re-plan verification; the rest
-# follow in staged insertion order.
-_DEFER_NEW_R8 = [
-    "eval_lift_gain_deciles",
-    "eval_spearman_value_vs_time",
-    "eval_auc_exact",
-    "eval_threshold_sweep",
-    "eval_calibration_bins",
-    "feature_multi_horizon",
-    "orders_little_law_identity",
-    "graph_two_hop_reach",
-    "eval_pr_auc_exact",
-    "eval_ks_statistic",
-    "eval_f1_threshold_sweep",
-    "eval_group_auc_by_dow",
-    "eval_psi_score_drift",
-    "eval_information_value_bins",
-    "eval_mcnemar_paired_rules",
-    "eval_mrr_first_purchase",
-    "eval_recall_at_k_per_user",
-    "feature_target_encode_loo",
-    "sample_group_kfold",
-    "sample_time_series_cv_expanding",
-    "eval_entity_split_leakage",
-    "feature_missingness_profile",
-    "feature_hashed_cross_bucket",
-    "churn_label_weekly",
-    "eval_auc_bootstrap_ci",
-    "eval_ndcg_at5_per_user",
-    "eval_brier_binned",
-    "eval_expected_calibration_error",
-    "eval_calibration_per_segment",
-    "feature_chi2_independence",
-    "eval_slice_balance_audit",
-    "eval_auc_rank_identity",
-    "eval_regression_metrics_exact",
-    "eval_auc_delta_champion",
-    "eval_label_flip_sensitivity",
-    "eval_ab_srm_check",
-    "embed_dim_variance_topk",
-    "embed_centroid_shift_drift",
-    "corpus_length_psi_drift",
-    "orders_forecast_pinball_loss",
-    "eval_decile_boundary_drift",
-    "feature_time_since_last_bucket",
-    "corpus_split_contamination",
-    "feature_session_position",
-    "eval_catalog_coverage_topk",
-    "eval_exposure_gini_topk",
-    "sample_negative_hard_mining",
-    "feature_pit_rfm_snapshot",
-    "feature_serving_freshness_age",
-    "feature_count_encode_type_hour",
-]
-
-
-# Wave E, activated in round 9: the 50 staged_r9 operators (time-series
-# diagnostics, liquidity microstructure, lake governance, attribution,
-# embedding-index audits). All 50 are never-driver-graded, so they
-# occupy the entire round-9 50-slot window. Ordering puts the two
-# re-planned global-tape ops first (VPIN volume buckets and
-# interarrival burstiness — both re-planned in round 8 from a global
-# time sort to day-partitioned windows, bidask_volume_clock's shape)
-# so their first driver grades double as re-plan verification; the
-# rest follow in staged insertion order.
-_DEFER_NEW_R9 = [
-    "bidask_vpin_volume_buckets",
-    "events_interarrival_burstiness",
-    "ts_backtest_linear_origins",
-    "ts_stl_lite_hourly",
-    "ts_changepoint_binseg",
-    "ts_spectral_goertzel_daily",
-    "ts_hampel_outliers",
-    "ts_mase_seasonal_naive",
-    "ts_seasonal_strength",
-    "bidask_amihud_illiquidity",
-    "bidask_garman_klass_vol",
-    "bidask_rv_signature_plot",
-    "bidask_trade_size_profile",
-    "gov_k_anonymity_census",
-    "gov_l_diversity_audit",
-    "gov_forget_cascade_audit",
-    "gov_partition_skew_audit",
-    "attr_time_decay",
-    "attr_position_u_shaped",
-    "attr_campaign_overlap",
-    "attr_incrementality_did",
-    "attr_markov_removal_effect",
-    "embed_sign_hamming_ann",
-    "embed_matryoshka_recall",
-    "embed_int4_quant_error",
-    "corpus_tokenizer_fertility",
-    "corpus_dup_threshold_curve",
-    "win_topk_with_ties",
-    "orders_order_to_cash_cycle",
-    "bidask_corwin_schultz_spread",
-    "ts_tracking_signal",
-    "attr_linear_multitouch",
-    "corpus_langid_confusion",
-    "gov_pseudonymize_consistent",
-    "gov_pii_exposure_scan",
-    "gov_access_tiering_plan",
-    "gov_column_profile_drift",
-    "orders_calendar_heatmap",
-    "dq_error_burst_poisson",
-    "join_trigram_fuzzy_names",
-    "orders_price_elasticity_bands",
-    "bidask_intraday_u_profile",
-    "graph_bipartite_projection",
-    "graph_hits_hubs_authorities",
-    "lineitem_return_rate_monthly",
-    "text_oov_rate_split",
-    "ts_pacf_lag2_exact",
-    "scan_metadata_size_audit",
-    "multimodal_binary_dedup",
-    "sql_unpivot_multi_measure",
-]
-
-
-# Wave F, activated in round 10: the 50 staged_r10 operators
-# (operational streaming correctness, geospatial grid primitives,
-# survival/inventory/sequential-experimentation analytics, fairness
-# audits, SQL-semantics censuses). All 50 are never-driver-graded, so
-# they occupy the entire round-10 50-slot window. Ordering puts the
-# re-planned op first (bidask_glosten_harris_decomp — re-planned in
-# round 8 from a global tape sort to day-partitioned windows, and its
-# determinant kept full decimal(38,0) width per the round-7 review) and
-# the operational-recovery flagship second (stream_checkpoint_recovery
-# — exactly-once across a process restart), so their first driver
-# grades double as re-plan / semantic-review verification; the rest
-# follow in staged insertion order.
-_DEFER_NEW_R10 = [
-    "bidask_glosten_harris_decomp",
-    "stream_checkpoint_recovery",
-    "geo_haversine_nearest_hub",
-    "events_kaplan_meier_weekly",
-    "ab_sequential_bound_check",
-    "parts_safety_stock_plan",
-    "events_markov_stationary",
-    "geo_gridcell_density_pyramid",
-    "stream_state_store_metrics",
-    "geo_point_in_zone_rect",
-    "geo_bounding_box_per_nation",
-    "parts_eoq_reorder_point",
-    "orders_promo_cannibalization",
-    "stream_incremental_batches",
-    "orders_repurchase_interval",
-    "graph_degree_assortativity",
-    "eval_demographic_parity_80pct",
-    "eval_equalized_odds_gap",
-    "sessionize_dwell_profile",
-    "dq_range_contract_audit",
-    "embed_whiten_variance_audit",
-    "embed_random_projection_jl",
-    "text_compression_ratio_proxy",
-    "multimodal_fixed_chunking",
-    "ts_stl_anomaly_days",
-    "orders_basket_size_profile",
-    "orders_customer_hhi_by_nation",
-    "events_funnel_by_dow",
-    "dq_price_consistency_audit",
-    "sql_null_handling_census",
-    "sql_calendar_edge_cases",
-    "orders_cohort_ltv_curve",
-    "eval_precision_at_k_curve",
-    "eval_score_histogram_by_class",
-    "geo_distance_decay_demand",
-    "graph_edge_weight_distribution",
-    "events_activity_powerlaw_fit",
-    "corpus_quality_length_matrix",
-    "part_brand_price_dispersion",
-    "orders_growth_contribution",
-    "events_session_velocity_audit",
-    "bidask_donchian_channel_daily",
-    "parts_demand_intermittency",
-    "events_simpson_diversity",
-    "corpus_source_syndication_matrix",
-    "sql_set_dedup_semantics",
-    "orders_dow_anova_fstat",
-    "stream_watermark_delay_sweep",
-    "eval_threshold_capacity_planner",
-    "events_user_temporal_entropy",
-]
-
-
-# Wave G, activated in round 11: the 50 staged_r11 operators (exact
-# rank/robust statistics, retail/orders analytics panels,
-# corpus/embedding audits, tape analytics, graph topology metrics,
-# SQL-semantics traps). All 50 are never-driver-graded, so they occupy
-# the entire round-11 50-slot window, and every one carries a DuckDB
-# oracle — a full hash-match window by construction. Ordering puts the
-# two review-hardened ops first so their first driver grades double as
-# review verification: graph_rich_club_topdeg (round-7 review derived
-# the C(club,2) denominator from the data instead of a constant — a
-# stale hardcode cannot survive its grade) and
-# bidask_anchored_vwap_monthly (month-anchored cumulative price*volume
-# in exact cents with int64 prefix-sum headroom and a full
-# (ts, event_id) DESC close-of-day tie-break); the rest follow in
-# staged insertion order.
-_DEFER_NEW_R11 = [
-    "graph_rich_club_topdeg",
-    "bidask_anchored_vwap_monthly",
-    "orders_rfm_migration_matrix",
-    "text_bigram_xent_split",
-    "ts_changepoint_two_level",
-    "sql_values_inline_table",
-    "join_full_outer_reconcile",
-    "subquery_not_in_null_trap",
-    "agg_trimmed_mean_exact",
-    "agg_geometric_mean_ln",
-    "agg_mann_whitney_u_exact",
-    "agg_mutual_information_priority_status",
-    "dq_functional_dependency_audit",
-    "orders_backlog_timeseries",
-    "orders_new_vs_repeat_monthly",
-    "orders_fiscal_445_calendar",
-    "orders_net_revenue_retention",
-    "orders_quarter_end_concentration",
-    "orders_price_index_laspeyres",
-    "parts_supplier_concentration",
-    "events_stickiness_dau_wau",
-    "events_session_bounce_rate",
-    "events_interval_union_coverage",
-    "sessionize_timeout_sensitivity",
-    "graph_reciprocity_directed",
-    "dq_error_rate_wilson_bound",
-    "text_hapax_legomena_ratio",
-    "corpus_js_divergence_sources",
-    "text_vocab_coverage_topk",
-    "text_term_burstiness_fano",
-    "text_cdc_chunk_boundaries",
-    "text_token_length_histogram",
-    "embed_kcenter_greedy_init",
-    "embed_simhash_bit_balance",
-    "knn_norm_bound_prune",
-    "multimodal_aspect_bucket_stats",
-    "multimodal_byte_entropy",
-    "ts_peak_prominence_daily",
-    "ts_runs_test_exact",
-    "ts_theil_sen_slope_daily",
-    "ts_median3_smoother",
-    "bidask_impact_decay_profile",
-    "eval_cohens_kappa_rules",
-    "eval_topk_overlap_champion",
-    "etl_partition_backfill_plan",
-    "etl_surrogate_key_stable",
-    "scan_selectivity_census",
-    "win_rolling_percentile_rank",
-    "parts_substitute_pairs",
-    "lineitem_tax_discount_matrix",
-]
-
-
-# Wave H, activated in round 12: the 50 staged_r12 operators — the
-# FINAL staged wave (the backlog is empty; no wave I). All 50 are
-# never-driver-graded, so they occupy the entire round-12 50-slot
-# window; 49 carry DuckDB oracles, 1 is rows-only by declared design
-# (source_binaryfile_manifest — binaryFile surfaces host mtimes/paths,
-# pinned instead by a ground-truth test). Ordering puts the
-# judge-requested op first so its first driver grade doubles as
-# request verification (embed_hubness_bucketed — the round-7 verdict's
-# scale-honest hubness twin over the LSH candidate graph) and the
-# rounding-boundary reconciliation second (lineitem_charge_reconcile_ties
-# — one-shot vs staged quantization genuinely diverging at half
-# boundaries, the most hash-sensitive op of the wave); the rest follow
-# in staged insertion order.
-_DEFER_NEW_R12 = [
-    "embed_hubness_bucketed",
-    "lineitem_charge_reconcile_ties",
-    "sql_distinct_on_emulation",
-    "sql_order_by_all_nulls",
-    "sql_exists_flag_projection",
-    "sql_listagg_distinct_sorted",
-    "win_frame_exclude_current",
-    "win_nth_from_last",
-    "win_reset_running_sum",
-    "win_mode_sliding",
-    "join_tier_range_dim",
-    "join_neighbors_below_above",
-    "set_symmetric_diff_census",
-    "agg_kendall_tau_daily",
-    "ts_ljung_box_q",
-    "ts_hurst_rs_daily",
-    "ts_variance_ratio_test",
-    "ts_holt_linear_fold",
-    "ts_subseries_median_profile",
-    "bidask_microprice_deviation",
-    "bidask_lee_ready_classify",
-    "bidask_effective_over_quoted",
-    "bidask_round_size_clustering",
-    "text_word_length_profile",
-    "text_token_gini_by_lang",
-    "text_rake_keyword_lite",
-    "corpus_dedup_survivorship_matrix",
-    "corpus_heaps_law_checkpoints",
-    "corpus_length_quantiles_by_source",
-    "embed_pca_top2_deflation",
-    "knn_query_batch_topk",
-    "embed_quant_recall_ab",
-    "graph_triangle_participation",
-    "graph_component_size_histogram",
-    "graph_scc_transition_bounded",
-    "dq_referential_census_all_fks",
-    "dq_schema_drift_typed",
-    "gov_t_closeness_audit",
-    "etl_scd2_integrity_audit",
-    "etl_late_data_impact",
-    "dq_monotonic_ts_audit",
-    "stream_chained_windows",
-    "stream_union_two_sources",
-    "multimodal_mime_sniff_census",
-    "sample_block_bootstrap_days",
-    "source_binaryfile_manifest",
-    "sink_json_lines_partitioned",
-    "source_text_lines_census",
-    "scan_decimal_parquet_roundtrip",
-    "scan_partition_file_census",
-]
-
-
-# Every activated wave's defer list, in activation order. rotation_order
-# flattens the concatenation to break never-graded ties (each wave's
-# additions sort after the previous wave's); _ordered_registry asserts
-# every named key exists.
-_DEFER_WAVES = [
-    _DEFER_NEW_R4,
-    _DEFER_NEW_R5,
-    _DEFER_NEW_R6,
-    _DEFER_NEW_R7,
-    _DEFER_NEW_R8,
-    _DEFER_NEW_R9,
-    _DEFER_NEW_R10,
-    _DEFER_NEW_R11,
-    _DEFER_NEW_R12,
-]
-
-
-def _grading_history() -> dict[str, list[int]]:
-    """Operator -> sorted rounds in which a CORRECTNESS_r*.json graded it,
-    read from the repo root (next to this file, where the driver writes)."""
+    - operator -> sorted rounds in which the driver graded it, and
+    - the keys whose MOST RECENT grade was a failure (an error or any
+      rows/schema/hash mismatch). These are regressions that must
+      re-prove themselves: the rotation puts them first instead of
+      treating the failed grade as a completed one (which would bench
+      them for two rounds)."""
     import glob
     import json
     import os
     import re
 
     here = os.path.dirname(os.path.abspath(__file__))
+    rounds: list[tuple[int, dict]] = []
+    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
+        if not m:
+            continue
+        try:
+            with open(path) as f:
+                rounds.append((int(m.group(1)), json.load(f)))
+        except (OSError, ValueError):
+            continue
     history: dict[str, list[int]] = {}
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        try:
-            with open(path) as f:
-                graded = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for key in graded:
-            history.setdefault(key, []).append(int(m.group(1)))
-    return history
-
-
-def _latest_failures() -> set[str]:
-    """Keys whose MOST RECENT driver grade was a failure (an error or any
-    rows/schema/hash mismatch). These are regressions that must re-prove
-    themselves: the rotation prepends them to the 50-key window instead of
-    treating the failed grade as a completed one (which would bench them
-    for two rounds — VERDICT.md round 3, item 4)."""
-    import glob
-    import json
-    import os
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    latest: dict[str, tuple[int, bool]] = {}
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        try:
-            with open(path) as f:
-                graded = json.load(f)
-        except (OSError, ValueError):
-            continue
-        rnd = int(m.group(1))
+    latest_failed: dict[str, bool] = {}
+    for rnd, graded in sorted(rounds, key=lambda t: t[0]):
         for key, v in graded.items():
-            failed = isinstance(v, dict) and (
+            history.setdefault(key, []).append(rnd)
+            latest_failed[key] = isinstance(v, dict) and (
                 v.get("err") not in (None, "no_oracle")
                 or any(
                     v.get(f) is False
                     for f in ("rows_match", "schema_match", "hash_match")
                 )
             )
-            prev = latest.get(key)
-            if prev is None or rnd >= prev[0]:
-                latest[key] = (rnd, failed)
-    return {k for k, (_, failed) in latest.items() if failed}
+    return history, {k for k, failed in latest_failed.items() if failed}
 
 
 def rotation_order(
@@ -693,27 +72,17 @@ def rotation_order(
     failed: frozenset[str] | set[str] = frozenset(),
 ) -> list[str]:
     """Least-recently-graded-first ordering: keys whose latest grade FAILED
-    lead (regressions re-prove themselves next round), then never-graded
-    keys, then ascending (times graded, last round graded); ties break on
-    the round-2 priority list position, then name — fully deterministic.
-    Each round the driver grades the first 50 keys, so this rotates stale
-    keys into the window automatically as CORRECTNESS files accumulate."""
-    prio = {n: i for i, n in enumerate(_GRADING_PRIORITY)}
-    deferred = {
-        n: i
-        for i, n in enumerate(
-            name for wave in _DEFER_WAVES for name in wave
-        )
-    }
+    lead (regressions re-prove themselves next round), then ascending
+    (times graded, last round graded) — so never-graded keys come before
+    any graded one — and ties break on name, fully deterministic. Each
+    round the driver grades the first 50 keys, so this rotates stale keys
+    into the window automatically as CORRECTNESS files accumulate."""
     return sorted(
         keys,
         key=lambda k: (
-            0 if k in failed else 1,
+            k not in failed,
             len(history.get(k, ())),
             max(history.get(k, ()), default=0),
-            # mid-round additions sort after all other never-graded keys,
-            # and each wave's additions after the previous wave's
-            prio.get(k, len(prio) + 1 + deferred.get(k, -1)),
             k,
         ),
     )
@@ -721,27 +90,7 @@ def rotation_order(
 
 def _ordered_registry():
     registry = load_all_operators()
-    missing = [n for n in _GRADING_PRIORITY if n not in registry]
-    assert not missing, f"priority list names unknown operators: {missing}"
-    missing_defer = [
-        n
-        for wave in _DEFER_WAVES
-        for n in wave
-        if n not in registry
-    ]
-    assert not missing_defer, (
-        f"defer list names unknown operators: {missing_defer}"
-    )
-    history = _grading_history()
-    if max((r for rs in history.values() for r in rs), default=0) >= 2:
-        # Round 3+: rotate by grading history; latest-failed keys first.
-        order = rotation_order(list(registry), history, _latest_failures())
-    else:
-        # Round 2: the hand-built window (47 ungraded hash-checkable ops,
-        # the fixed dedup_simhash, 2 ungraded rows-only ops = slots 1-50).
-        order = _GRADING_PRIORITY + [
-            n for n in registry if n not in set(_GRADING_PRIORITY)
-        ]
+    order = rotation_order(list(registry), *_grading_record())
     return {n: registry[n] for n in order}
 
 

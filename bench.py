@@ -57,12 +57,13 @@ DUCKDB_MS_SF01 = {
 }
 
 
-# Probe-job submission bracket measured by tools/dispatch_study.py
-# (round 9, BASELINE.md addendum): a trivial 2-stage job costs 27-42 ms
-# end to end once planning and the collect socket are excluded. Each
-# scheduler job a query runs BEYOND its first is a serialized dispatch
-# round the single-floor `marginal` subtraction does not remove
-# (round-10 job-anatomy study); the adjusted band below subtracts them.
+# Probe-job submission bracket measured in round 9 (BASELINE.md,
+# "Round-9 addendum: the floor decomposed to its three terms"): a
+# trivial 2-stage job costs 27-42 ms end to end once planning and the
+# collect socket are excluded. Each scheduler job a query runs BEYOND
+# its first is a serialized dispatch round the single-floor `marginal`
+# subtraction does not remove (round-10 job-anatomy study); the
+# adjusted band below subtracts them.
 JOB_MS_LO, JOB_MS_HI = 27.0, 42.0
 
 

@@ -39,104 +39,18 @@ from etl_intraday_bidask_spark.operators import (  # noqa: F401
 from etl_intraday_bidask_spark.plans import pipeline  # noqa: E402,F401
 from etl_intraday_bidask_spark.streaming import stateful  # noqa: E402,F401
 
-# Round 6: activate wave B — the 50 staged_r6/staged_r6b operators
-# (parity-tested at sf0.001/0.01/0.1 + fuzz-battered since round 5) join
-# the graded surface as SURVEY.md §2.28. staged_r6 imports staged_r6b at
-# its bottom, so STAGED holds the union of both files.
-from etl_intraday_bidask_spark.operators import staged_r6  # noqa: E402
-from etl_intraday_bidask_spark.registry import activate_staged  # noqa: E402
-
-activate_staged(staged_r6.STAGED)
-
-# Round 7: activate wave C — the 50 staged_r7 operators (parity-tested
-# at sf0.001/0.01/0.1, fuzz-battered, cross-asserted, plan-audited since
-# round 5; the two ADVICE-flagged bugs — k-core keep-set census and the
-# seasonal-index decimal division — were fixed in round 6 before
-# activation). They join the graded surface as SURVEY.md §2.29.
-from etl_intraday_bidask_spark.operators import staged_r7  # noqa: E402
-
-activate_staged(staged_r7.STAGED_R7)
-
-# Round 8: activate wave D — the 50 staged_r8 operators (the
-# ML-evaluation and feature-engineering surface: exact ROC/PR-AUC by
-# integer rank algebra, calibration, drift, CV-fold and leakage
-# audits; parity-tested at sf0.001/0.01/0.1, fuzz-battered,
-# cross-asserted, plan-audited since round 5/6; the round-7 review's
-# null-safe grid-rank decompositions are in). SURVEY.md §2.30.
-from etl_intraday_bidask_spark.operators import staged_r8  # noqa: E402
-
-activate_staged(staged_r8.STAGED_R8)
-
-# Round 9: activate wave E — the 50 staged_r9 operators (time-series
-# decomposition/forecast diagnostics, liquidity microstructure, lake
-# governance, marketing attribution, embedding-index audits; built
-# round 6, parity-tested at sf0.001/0.01/0.1, fuzz-battered,
-# cross-asserted, plan-audited; the round-8 re-plan made the two tape
-# ops — VPIN and interarrival burstiness — day-partitioned, so no
-# 100 TB tape ever sorts through one task). SURVEY.md §2.31.
-from etl_intraday_bidask_spark.operators import staged_r9  # noqa: E402
-
-activate_staged(staged_r9.STAGED_R9)
-
-# Round 10: activate wave F — the 50 staged_r10 operators (operational
-# streaming correctness: checkpoint recovery, incremental batches,
-# state-store metrics, watermark-delay sweep; geospatial primitives on
-# the exact integer coordinate grid; survival/inventory/sequential-
-# experimentation analytics; fairness audits; SQL-semantics censuses.
-# Built round 6, parity-tested at sf0.001/0.01/0.1, fuzz-battered,
-# cross-asserted, plan-audited; the round-7 semantic review fixed the
-# KM zero-factor, recovery-cache, micro-batch coalesce, ANOVA HUGEINT
-# fold, and Glosten-Harris determinant-headroom findings, and the
-# round-8 re-plan made Glosten-Harris day-partitioned). SURVEY.md §2.32.
-from etl_intraday_bidask_spark.operators import staged_r10  # noqa: E402
-
-activate_staged(staged_r10.STAGED_R10)
-
-# Round 11: activate wave G — the 50 staged_r11 operators (exact
-# rank/robust statistics: trimmed mean, Mann-Whitney U, Theil-Sen
-# slope, runs test, Wilson bounds, Cohen's kappa; retail/orders panels:
-# RFM migration, NRR, Laspeyres price index, fiscal 4-4-5 calendar,
-# backlog reconstruction; corpus/embedding audits: JS divergence,
-# hapax ratio, CDC chunking, k-center greedy seeding, SimHash bit
-# balance, Cauchy-Schwarz norm-bound pruning; tape analytics: anchored
-# VWAP, impact decay, two-level changepoint; graph rich-club and
-# reciprocity; SQL-semantics traps: NOT IN null, VALUES inline, full
-# outer reconcile). Built round 7, parity-tested at sf0.001/0.01/0.1,
-# fuzz-battered, cross-asserted, plan-audited; the round-7 review
-# fixed the rich-club denominator (derived from data, not hardcoded)
-# and the anchored-VWAP int64 prefix-sum headroom; re-certified 50/50
-# on driver-shaped vanilla sessions at the round-9 AND round-10 final
-# trees. SURVEY.md §2.33.
-from etl_intraday_bidask_spark.operators import staged_r11  # noqa: E402
-
-activate_staged(staged_r11.STAGED_R11)
-
-# Round 12: activate wave H — the 50 staged_r12 operators, the FINAL
-# staged wave (the backlog is now empty by round-11 brief item 8; no
-# wave I exists). Themes: SQL-surface semantics (DISTINCT ON, NULLS
-# FIRST/LAST census, projected EXISTS, DISTINCT listagg), window
-# mechanics (frame-exclude-current, k-from-end, data-driven reset
-# islands, sliding mode), nearest-key and range-dim joins, exact
-# nonparametric time series (Ljung-Box, Hurst R/S, variance ratio,
-# Holt linear dyadic fold, weekday medians), microstructure wave 4
-# (microprice, Lee-Ready, effective-over-quoted, round-size
-# clustering), corpus observability (word-length profile, token Gini,
-# RAKE-lite, survivorship matrix, Heaps checkpoints, per-source
-# quantiles), embeddings/ANN wave 4 (deflated PCA top-2, batched
-# queries, int8 recall A/B, bucketed hubness — the round-7
-# judge-requested scale-honest twin), bounded-graph SCC / CC histogram
-# / triangle participation, governance (t-closeness EMD, SCD2
-# integrity, late-data impact, monotonic-ts, all-FK census, typed
-# schema drift), chained/union streaming twins, MIME sniffing,
-# day-block bootstrap, and source/sink surfaces (binaryFile manifest,
-# NDJSON partitioned sink, text-lines roundtrip, decimal parquet
-# roundtrip, _metadata partition census). Built round 8, parity-green
-# at sf0.001/0.01/0.1 at stage time, re-certified on driver-shaped
-# vanilla sessions at later trees (SCALE.md §28 discipline).
-# SURVEY.md §2.34.
-from etl_intraday_bidask_spark.operators import staged_r12  # noqa: E402
-
-activate_staged(staged_r12.STAGED_R12)
+# Imported after plans/ and streaming/ to keep the registry's insertion
+# order, which before/after registry dumps compare.
+from etl_intraday_bidask_spark.operators import (  # noqa: E402,F401
+    staged_r6,
+    staged_r6b,
+    staged_r7,
+    staged_r8,
+    staged_r9,
+    staged_r10,
+    staged_r11,
+    staged_r12,
+)
 
 # NOTE: a transformWithStateInPandas operator (the Spark 4 successor to
 # applyInPandasWithState) was attempted and reverted: its driver-side

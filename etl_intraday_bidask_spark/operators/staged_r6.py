@@ -1,12 +1,13 @@
-"""Round-6 wave-B operators (SURVEY.md §2.28, built under §7 M7).
+"""Mixed-family operators (SURVEY.md §2.28, first half).
 
-Staged during round 5 (implemented + parity-tested at three SFs +
-fuzz-battered, deliberately unregistered so the engineered round-5
-window stayed exactly 27+23), then ACTIVATED in round 6:
-``operators/__init__`` promotes the ``STAGED`` dict (this file's 35 ops
-plus ``staged_r6b``'s 15) into the global registry via
-``registry.activate_staged``, and ``__spark_entry__._DEFER_NEW_R6``
-pins the wave as the round-6 50-slot grading window.
+JSON ingest normalization, incremental materialization and late-
+arriving-dimension repair; multi-grain bitmap rollups, funnels and
+share-of-parent windows; bid/ask depth imbalance, return ACF, volume
+clocks and tick-rule signed volume; as-of and snapshot dimension
+joins; corpus contamination, Zipf fit, n-gram novelty and duplicate-
+cluster statistics; triangle counts, embedding class separation and
+a Python UDTF with a table argument. ``staged_r6b`` holds the other
+15 operators of the same section.
 
 Each op follows the full house discipline (scaled-integer parity,
 oracle SQL, scale notes).
@@ -20,24 +21,14 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from etl_intraday_bidask_spark.functions.parity import scaled_long
-from etl_intraday_bidask_spark.registry import QuerySpec, SparkFn
+from etl_intraday_bidask_spark.registry import register
 from etl_intraday_bidask_spark.tables import load, scratch_dir
-
-STAGED: dict[str, QuerySpec] = {}
-
-
-def staged(name: str, oracle_sql: str | None, description: str = ""):
-    def deco(fn: SparkFn) -> SparkFn:
-        STAGED[name] = QuerySpec(name, fn, oracle_sql, description)
-        return fn
-
-    return deco
 
 
 _INGEST_STAGE: dict[str, str] = {}
 
 
-@staged(
+@register(
     "etl_json_ingest_normalize",
     oracle_sql="""
         SELECT event_type,
@@ -97,7 +88,7 @@ def etl_json_ingest_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "agg_bitmap_rollup_multigrain",
     oracle_sql="""
         WITH masks AS (
@@ -177,7 +168,7 @@ def agg_bitmap_rollup_multigrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "anomaly_winsorized_zscore",
     oracle_sql="""
         WITH c AS (
@@ -276,7 +267,7 @@ def anomaly_winsorized_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "sessionize_cross_device",
     oracle_sql="""
         WITH mapped AS (
@@ -331,7 +322,7 @@ def sessionize_cross_device(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "bidask_l2_depth_imbalance",
     oracle_sql="""
         WITH q AS (
@@ -387,7 +378,7 @@ def bidask_l2_depth_imbalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "udtf_table_argument",
     oracle_sql="""
         SELECT event_type,
@@ -442,7 +433,7 @@ def udtf_table_argument(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "corpus_cross_lingual_contamination",
     oracle_sql="""
         WITH t AS (
@@ -532,7 +523,7 @@ def corpus_cross_lingual_contamination(
 _INCR_STAGE: dict[str, str] = {}
 
 
-@staged(
+@register(
     "etl_incremental_materialize",
     oracle_sql="""
         SELECT event_type,
@@ -588,7 +579,7 @@ def etl_incremental_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "text_zipf_fit",
     oracle_sql="""
         WITH vocab AS (
@@ -682,31 +673,6 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
-    "corpus_dedup_cluster_stats",
-    oracle_sql=None,  # placeholder; real CTE assigned below
-    description="Duplicate-cluster size histogram: the connected-"
-    "components output (each doc → its cluster and cluster size) "
-    "reduced to the distribution of cluster sizes — the dedup "
-    "observability metric (a fat tail of giant clusters means "
-    "boilerplate is eating the corpus; all-2 clusters mean mirror "
-    "pairs). Re-uses the registered CC operator's plan; distinct "
-    "(component, size) pairs are cluster-count-sized, the histogram "
-    "aggregate is tiny.",
-)
-def corpus_dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_intraday_bidask_spark.registry import REGISTRY
-
-    cc = REGISTRY["dedup_connected_components"].spark_fn(spark, sf_dir)
-    return (
-        cc.select("component", "n_members")
-        .distinct()
-        .groupBy(F.col("n_members").alias("cluster_size"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_clusters"))
-        .orderBy("cluster_size")
-    )
-
-
 # The cluster-stats oracle wraps the shared CC edge CTEs (same source of
 # truth as dedup_connected_components' own oracle — cannot drift).
 def _cluster_stats_oracle() -> str:
@@ -736,15 +702,32 @@ def _cluster_stats_oracle() -> str:
     """
 
 
-STAGED["corpus_dedup_cluster_stats"] = QuerySpec(
+@register(
     "corpus_dedup_cluster_stats",
-    STAGED["corpus_dedup_cluster_stats"].spark_fn,
-    _cluster_stats_oracle(),
-    STAGED["corpus_dedup_cluster_stats"].description,
+    oracle_sql=_cluster_stats_oracle(),
+    description="Duplicate-cluster size histogram: the connected-"
+    "components output (each doc → its cluster and cluster size) "
+    "reduced to the distribution of cluster sizes — the dedup "
+    "observability metric (a fat tail of giant clusters means "
+    "boilerplate is eating the corpus; all-2 clusters mean mirror "
+    "pairs). Re-uses the registered CC operator's plan; distinct "
+    "(component, size) pairs are cluster-count-sized, the histogram "
+    "aggregate is tiny.",
 )
+def corpus_dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from etl_intraday_bidask_spark.registry import REGISTRY
+
+    cc = REGISTRY["dedup_connected_components"].spark_fn(spark, sf_dir)
+    return (
+        cc.select("component", "n_members")
+        .distinct()
+        .groupBy(F.col("n_members").alias("cluster_size"))
+        .agg(F.count(F.lit(1)).cast("long").alias("n_clusters"))
+        .orderBy("cluster_size")
+    )
 
 
-@staged(
+@register(
     "sample_importance_reweight",
     oracle_sql="""
         WITH per_src AS (
@@ -801,7 +784,7 @@ def sample_importance_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "bidask_returns_acf",
     oracle_sql="""
         WITH hourly AS (
@@ -921,7 +904,7 @@ def bidask_returns_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("lag_k")
 
 
-@staged(
+@register(
     "bidask_volume_clock",
     oracle_sql="""
         WITH p AS (
@@ -991,7 +974,7 @@ def bidask_volume_clock(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "dq_freshness_sla",
     oracle_sql="""
         WITH anchor AS (SELECT max(ts) AS global_max FROM events)
@@ -1041,7 +1024,7 @@ def dq_freshness_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "join_asof_nearest",
     oracle_sql="""
         WITH merged AS (
@@ -1148,7 +1131,7 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_id")
 
 
-@staged(
+@register(
     "set_intersect_except_all",
     oracle_sql="""
         WITH a AS (
@@ -1200,7 +1183,7 @@ def set_intersect_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     return i.unionByName(e).select("op", "prio", "n").orderBy("op", "prio")
 
 
-@staged(
+@register(
     "scan_metadata_columns",
     oracle_sql="""
         SELECT 'events.parquet' AS file_name,
@@ -1237,7 +1220,7 @@ def scan_metadata_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "text_vocab_overlap_matrix",
     oracle_sql="""
         WITH v AS (
@@ -1307,7 +1290,7 @@ def text_vocab_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "corpus_ngram_novelty_rate",
     oracle_sql="""
         WITH g AS (
@@ -1374,7 +1357,7 @@ def corpus_ngram_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "multimodal_shard_manifest",
     oracle_sql="""
         WITH cum AS (
@@ -1432,7 +1415,7 @@ def multimodal_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "join_dim_snapshot_asof",
     oracle_sql="""
         WITH versions AS (
@@ -1509,7 +1492,7 @@ def join_dim_snapshot_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "win_first_touch_attribution",
     oracle_sql="""
         WITH merged AS (
@@ -1602,7 +1585,7 @@ def win_first_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "etl_late_arriving_dim_repair",
     oracle_sql="""
         WITH present AS (
@@ -1684,7 +1667,7 @@ def etl_late_arriving_dim_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "graph_triangle_count",
     oracle_sql="""
         WITH buckets AS (
@@ -1753,7 +1736,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "win_median_sliding_hourly",
     oracle_sql="""
         WITH hourly AS (
@@ -1797,7 +1780,7 @@ def win_median_sliding_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("bucket_us")
 
 
-@staged(
+@register(
     "text_code_detect_heuristic",
     oracle_sql="""
         WITH scored AS (
@@ -1861,7 +1844,7 @@ def text_code_detect_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "bidask_tick_rule_signed_volume",
     oracle_sql="""
         WITH merged AS (
@@ -1953,7 +1936,7 @@ def bidask_tick_rule_signed_volume(
     )
 
 
-@staged(
+@register(
     "dedup_cross_source_exact",
     oracle_sql="""
         WITH hashed AS (
@@ -2005,7 +1988,7 @@ def dedup_cross_source_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "orders_market_basket_lift",
     oracle_sql="""
         WITH ob AS (
@@ -2093,7 +2076,7 @@ def orders_market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "win_rank_migration",
     oracle_sql="""
         WITH rev AS (
@@ -2169,7 +2152,7 @@ def win_rank_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "embed_class_separation",
     oracle_sql="""
         WITH exp AS (
@@ -2288,7 +2271,7 @@ def embed_class_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "win_share_of_parent_nested",
     oracle_sql="""
         WITH cust_rev AS (
@@ -2372,7 +2355,7 @@ def win_share_of_parent_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "q6_sensitivity_whatif",
     oracle_sql="""
         WITH grid AS (
@@ -2436,7 +2419,7 @@ def q6_sensitivity_whatif(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "date_spine_business_days",
     oracle_sql="""
         WITH bounds AS (
@@ -2499,7 +2482,7 @@ def date_spine_business_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "agg_funnel_time_to_convert",
     oracle_sql="""
         WITH merged AS (
@@ -2584,10 +2567,3 @@ def agg_funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
         pd_(0.99).alias("p99_us"),
         F.max("delay_us").cast("long").alias("max_us"),
     )
-
-
-# Wave B lives in its own module for file-size sanity but registers
-# into the SAME ``STAGED`` dict; importing it here means every consumer
-# of ``STAGED`` (tests/test_staged_r6.py's parametrization, the leak
-# guard, round-6 activation) sees the full staged surface.
-from etl_intraday_bidask_spark.operators import staged_r6b  # noqa: E402,F401

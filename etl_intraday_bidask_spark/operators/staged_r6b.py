@@ -1,12 +1,11 @@
-"""STAGED round-6 operators, wave B (SURVEY.md §7 M7 continuation).
+"""Orders, events and distribution operators (SURVEY.md §2.28,
+second half).
 
-Same contract as ``staged_r6.py`` (see that module's docstring for why
-these are implemented + parity-tested but NOT registered): this file
-brings the staged wave to exactly 50 keys — one full driver grading
-window — so round 6 can activate a complete window of first-time
-grades in one mechanical step. Registered into the SAME ``STAGED``
-dict; ``staged_r6`` imports this module at its bottom so every
-consumer of ``STAGED`` sees the union.
+Cohort retention, RFM segments and revenue bridges over orders;
+event transition matrices, rolling active users and seasonality
+profiles; Pareto/Gini concentration, equi-depth histograms, count-min
+heavy hitters and OLS normal equations; concurrent intervals, CUSUM
+shift detection, the Roll spread and bitemporal point-in-time joins.
 
 House discipline throughout: scaled-integer exact arithmetic for every
 fixture-grid value (``functions/parity.py``), explicit ``(key)``
@@ -21,11 +20,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from etl_intraday_bidask_spark.functions.parity import scaled_long
-from etl_intraday_bidask_spark.operators.staged_r6 import staged
+from etl_intraday_bidask_spark.registry import register
 from etl_intraday_bidask_spark.tables import load
 
 
-@staged(
+@register(
     "orders_cohort_retention",
     oracle_sql="""
         WITH cohort AS (
@@ -84,7 +83,7 @@ def orders_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "orders_rfm_segments",
     oracle_sql="""
         WITH rfm AS (
@@ -161,7 +160,7 @@ def orders_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "cep_transition_matrix",
     oracle_sql="""
         WITH seq AS (
@@ -216,7 +215,7 @@ def cep_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("prev_type", "next_type")
 
 
-@staged(
+@register(
     "events_active_users_rolling",
     oracle_sql="""
         WITH pairs AS (
@@ -307,7 +306,7 @@ def events_active_users_rolling(
     ).orderBy("day_us")
 
 
-@staged(
+@register(
     "agg_pareto_cumshare",
     oracle_sql="""
         WITH cust AS (
@@ -397,7 +396,7 @@ def agg_pareto_cumshare(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "agg_gini_concentration",
     oracle_sql="""
         WITH cust AS (
@@ -491,7 +490,7 @@ def agg_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "agg_concurrent_intervals",
     oracle_sql="""
         WITH spans AS (
@@ -567,7 +566,7 @@ def agg_concurrent_intervals(
     )
 
 
-@staged(
+@register(
     "orders_revenue_bridge",
     oracle_sql="""
         WITH per_cust AS (
@@ -659,7 +658,7 @@ def orders_revenue_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "dq_cusum_shift_detect",
     oracle_sql="""
         WITH daily AS (
@@ -753,7 +752,7 @@ def dq_cusum_shift_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("day_us")
 
 
-@staged(
+@register(
     "events_seasonality_profile",
     oracle_sql="""
         WITH cells AS (
@@ -806,7 +805,7 @@ def events_seasonality_profile(
     ).orderBy("dow", "hod")
 
 
-@staged(
+@register(
     "bidask_roll_spread",
     oracle_sql="""
         WITH px AS (
@@ -912,7 +911,7 @@ def bidask_roll_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "agg_histogram_equi_depth",
     oracle_sql="""
         WITH ranked AS (
@@ -972,7 +971,7 @@ def agg_histogram_equi_depth(
     )
 
 
-@staged(
+@register(
     "agg_heavy_hitters_cms",
     oracle_sql="""
         WITH per_user AS (
@@ -1069,7 +1068,7 @@ def agg_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "join_bitemporal_pit",
     oracle_sql="""
         WITH versions AS (
@@ -1172,7 +1171,7 @@ def join_bitemporal_pit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@register(
     "agg_ols_normal_equations",
     oracle_sql="""
         WITH s AS (

@@ -1,13 +1,9 @@
-"""Wave D operators — staged through rounds 5-7, ACTIVATED in round 8
-(registered via ``registry.activate_staged`` in ``operators/__init__``
-and pinned as the round-8 grading window, SURVEY.md §2.30).
+"""ML-evaluation and feature-engineering operators (SURVEY.md §2.30).
 
-Theme: the ML-evaluation and feature-engineering surface a
-training-data engine needs once models consume its output — exact
-ROC-AUC from integer rank algebra, threshold sweeps, calibration
-tables, multi-horizon feature windows — plus cross-op integral
-identities. Same staging contract and house discipline as
-``staged_r6/7`` (own ``STAGED_R8`` dict + leak guard).
+The surface a training-data engine needs once models consume its
+output — exact ROC-AUC from integer rank algebra, threshold sweeps,
+calibration tables, multi-horizon feature windows — plus cross-op
+integral identities.
 
 Labels/scores are synthesized deterministically from the events
 fixture: purchases are the positive class, views the negative, and the
@@ -22,21 +18,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from etl_intraday_bidask_spark.functions.parity import scaled_long
-from etl_intraday_bidask_spark.registry import QuerySpec, SparkFn
+from etl_intraday_bidask_spark.registry import register
 from etl_intraday_bidask_spark.tables import load
 
-STAGED_R8: dict[str, QuerySpec] = {}
 
-
-def staged8(name: str, oracle_sql: str | None, description: str = ""):
-    def deco(fn: SparkFn) -> SparkFn:
-        STAGED_R8[name] = QuerySpec(name, fn, oracle_sql, description)
-        return fn
-
-    return deco
-
-
-@staged8(
+@register(
     "eval_auc_exact",
     oracle_sql="""
         WITH scored AS (
@@ -117,7 +103,7 @@ def eval_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged8(
+@register(
     "eval_threshold_sweep",
     oracle_sql="""
         WITH scored AS (
@@ -192,7 +178,7 @@ def eval_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("threshold_cents")
 
 
-@staged8(
+@register(
     "eval_calibration_bins",
     oracle_sql="""
         WITH scored AS (
@@ -247,7 +233,7 @@ def eval_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged8(
+@register(
     "feature_multi_horizon",
     oracle_sql="""
         WITH ev AS (
@@ -317,7 +303,7 @@ def feature_multi_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("user_id", "ts_us", "n_1h")
 
 
-@staged8(
+@register(
     "orders_little_law_identity",
     oracle_sql="""
         WITH spans AS (
@@ -414,7 +400,7 @@ def orders_little_law_identity(
     )
 
 
-@staged8(
+@register(
     "graph_two_hop_reach",
     oracle_sql="""
         WITH buckets AS (
@@ -547,7 +533,7 @@ def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-@staged8(
+@register(
     "eval_pr_auc_exact",
     oracle_sql="""
         WITH scored AS (
@@ -621,7 +607,7 @@ def eval_pr_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged8(
+@register(
     "eval_lift_gain_deciles",
     oracle_sql="""
         WITH scored AS (
@@ -740,7 +726,7 @@ def eval_lift_gain_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged8(
+@register(
     "eval_ks_statistic",
     oracle_sql="""
         WITH scored AS (
@@ -821,7 +807,7 @@ def eval_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged8(
+@register(
     "eval_f1_threshold_sweep",
     oracle_sql="""
         WITH scored AS (
@@ -889,7 +875,7 @@ def eval_f1_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("threshold_cents")
 
 
-@staged8(
+@register(
     "eval_group_auc_by_dow",
     oracle_sql="""
         WITH scored AS (
@@ -975,7 +961,7 @@ def eval_group_auc_by_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged8(
+@register(
     "eval_psi_score_drift",
     oracle_sql="""
         WITH scored AS (
@@ -1071,7 +1057,7 @@ def eval_psi_score_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("score_bin")
 
 
-@staged8(
+@register(
     "eval_information_value_bins",
     oracle_sql="""
         WITH scored AS (
@@ -1162,7 +1148,7 @@ def eval_information_value_bins(
     ).orderBy("score_bin")
 
 
-@staged8(
+@register(
     "eval_mcnemar_paired_rules",
     oracle_sql="""
         WITH scored AS (
@@ -1244,7 +1230,7 @@ def eval_mcnemar_paired_rules(
     )
 
 
-@staged8(
+@register(
     "eval_mrr_first_purchase",
     oracle_sql="""
         WITH scored AS (
@@ -1326,7 +1312,7 @@ def eval_mrr_first_purchase(
     )
 
 
-@staged8(
+@register(
     "eval_recall_at_k_per_user",
     oracle_sql="""
         WITH scored AS (
@@ -1417,7 +1403,7 @@ def eval_recall_at_k_per_user(
     )
 
 
-@staged8(
+@register(
     "feature_target_encode_loo",
     oracle_sql="""
         WITH scored AS (
@@ -1492,7 +1478,7 @@ def feature_target_encode_loo(
     )
 
 
-@staged8(
+@register(
     "sample_group_kfold",
     oracle_sql="""
         WITH folded AS (
@@ -1536,7 +1522,7 @@ def sample_group_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged8(
+@register(
     "sample_time_series_cv_expanding",
     oracle_sql="""
         WITH ev AS (
@@ -1641,7 +1627,7 @@ def sample_time_series_cv_expanding(
     ).orderBy("fold")
 
 
-@staged8(
+@register(
     "eval_entity_split_leakage",
     oracle_sql="""
         WITH split AS (
@@ -1712,7 +1698,7 @@ def eval_entity_split_leakage(
     )
 
 
-@staged8(
+@register(
     "feature_missingness_profile",
     oracle_sql="""
         SELECT event_type,
@@ -1769,7 +1755,7 @@ def feature_missingness_profile(
     )
 
 
-@staged8(
+@register(
     "feature_hashed_cross_bucket",
     oracle_sql="""
         WITH crossed AS (
@@ -1831,7 +1817,7 @@ def feature_hashed_cross_bucket(
     )
 
 
-@staged8(
+@register(
     "churn_label_weekly",
     oracle_sql="""
         WITH weekly AS (
@@ -1912,7 +1898,7 @@ def churn_label_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged8(
+@register(
     "eval_auc_bootstrap_ci",
     oracle_sql="""
         WITH scored AS (
@@ -2033,7 +2019,7 @@ def eval_auc_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged8(
+@register(
     "eval_ndcg_at5_per_user",
     oracle_sql="""
         WITH scored AS (
@@ -2151,7 +2137,7 @@ def eval_ndcg_at5_per_user(
     return out.orderBy("user_id")
 
 
-@staged8(
+@register(
     "eval_brier_binned",
     oracle_sql="""
         WITH scored AS (
@@ -2212,7 +2198,7 @@ def eval_brier_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged8(
+@register(
     "eval_expected_calibration_error",
     oracle_sql="""
         WITH scored AS (
@@ -2283,7 +2269,7 @@ def eval_expected_calibration_error(
     )
 
 
-@staged8(
+@register(
     "eval_calibration_per_segment",
     oracle_sql="""
         WITH scored AS (
@@ -2345,7 +2331,7 @@ def eval_calibration_per_segment(
     )
 
 
-@staged8(
+@register(
     "feature_chi2_independence",
     oracle_sql="""
         WITH obs AS (
@@ -2424,7 +2410,7 @@ def feature_chi2_independence(
     )
 
 
-@staged8(
+@register(
     "eval_slice_balance_audit",
     oracle_sql="""
         WITH scored AS (
@@ -2502,7 +2488,7 @@ def eval_slice_balance_audit(
     )
 
 
-@staged8(
+@register(
     "eval_auc_rank_identity",
     oracle_sql="""
         WITH scored AS (
@@ -2597,7 +2583,7 @@ def eval_auc_rank_identity(
     )
 
 
-@staged8(
+@register(
     "eval_spearman_value_vs_time",
     oracle_sql="""
         WITH ev AS (
@@ -2692,7 +2678,7 @@ def eval_spearman_value_vs_time(
     )
 
 
-@staged8(
+@register(
     "eval_regression_metrics_exact",
     oracle_sql="""
         WITH joined AS (
@@ -2770,7 +2756,7 @@ def eval_regression_metrics_exact(
     )
 
 
-@staged8(
+@register(
     "eval_auc_delta_champion",
     oracle_sql="""
         WITH scored AS (
@@ -2887,7 +2873,7 @@ def eval_auc_delta_champion(
         .alias("delta_ppm"),
     )
 
-@staged8(
+@register(
     "eval_label_flip_sensitivity",
     oracle_sql="""
         WITH scored AS (
@@ -3007,7 +2993,7 @@ def eval_label_flip_sensitivity(
     )
 
 
-@staged8(
+@register(
     "eval_ab_srm_check",
     oracle_sql="""
         WITH assigned AS (
@@ -3084,7 +3070,7 @@ def eval_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged8(
+@register(
     "embed_dim_variance_topk",
     oracle_sql="""
         WITH exp AS (
@@ -3152,7 +3138,7 @@ def embed_dim_variance_topk(
     )
 
 
-@staged8(
+@register(
     "embed_centroid_shift_drift",
     oracle_sql="""
         WITH exp AS (
@@ -3234,7 +3220,7 @@ def embed_centroid_shift_drift(
     )
 
 
-@staged8(
+@register(
     "corpus_length_psi_drift",
     oracle_sql="""
         WITH binned AS (
@@ -3320,7 +3306,7 @@ def corpus_length_psi_drift(
     ).orderBy("len_bin")
 
 
-@staged8(
+@register(
     "orders_forecast_pinball_loss",
     oracle_sql="""
         WITH daily AS (
@@ -3404,7 +3390,7 @@ def orders_forecast_pinball_loss(
     )
 
 
-@staged8(
+@register(
     "eval_decile_boundary_drift",
     oracle_sql="""
         WITH halves AS (
@@ -3478,7 +3464,7 @@ def eval_decile_boundary_drift(
     return a.crossJoin(F.broadcast(b)).select(*cols)
 
 
-@staged8(
+@register(
     "feature_time_since_last_bucket",
     oracle_sql="""
         WITH gaps AS (
@@ -3544,7 +3530,7 @@ def feature_time_since_last_bucket(
     )
 
 
-@staged8(
+@register(
     "corpus_split_contamination",
     oracle_sql="""
         WITH split AS (
@@ -3654,7 +3640,7 @@ def corpus_split_contamination(
     )
 
 
-@staged8(
+@register(
     "feature_session_position",
     oracle_sql="""
         WITH seq AS (
@@ -3756,7 +3742,7 @@ def feature_session_position(
     )
 
 
-@staged8(
+@register(
     "eval_catalog_coverage_topk",
     oracle_sql="""
         WITH ranked AS (
@@ -3829,7 +3815,7 @@ def eval_catalog_coverage_topk(
     )
 
 
-@staged8(
+@register(
     "eval_exposure_gini_topk",
     oracle_sql="""
         WITH ranked AS (
@@ -3920,7 +3906,7 @@ def eval_exposure_gini_topk(
     )
 
 
-@staged8(
+@register(
     "sample_negative_hard_mining",
     oracle_sql="""
         WITH purchases AS (
@@ -3997,7 +3983,7 @@ def sample_negative_hard_mining(
     )
 
 
-@staged8(
+@register(
     "feature_pit_rfm_snapshot",
     oracle_sql="""
         WITH pit AS (
@@ -4065,7 +4051,7 @@ def feature_pit_rfm_snapshot(
     )
 
 
-@staged8(
+@register(
     "feature_serving_freshness_age",
     oracle_sql="""
         WITH merged AS (
@@ -4156,7 +4142,7 @@ def feature_serving_freshness_age(
     )
 
 
-@staged8(
+@register(
     "feature_count_encode_type_hour",
     oracle_sql="""
         WITH cells AS (

@@ -1,21 +1,18 @@
-"""STAGED round-9 operators (wave E) — implemented and parity-tested,
-NOT registered, NOT part of the wave B (round 6), C (round 7) or
-D (round 8) activation windows.
+"""Time-series, microstructure, governance and attribution operators
+(SURVEY.md §2.31).
 
-Themes: time-series decomposition and forecast backtesting, liquidity
+Time-series decomposition and forecast backtesting, liquidity
 microstructure (Amihud, Corwin-Schultz, VPIN, Garman-Klass), data-lake
 governance (k-anonymity, tombstone purge audits, partition skew),
 marketing attribution (time-decay, linear, U-shaped, Markov removal
 effect), and embedding-index engineering (sign-bit Hamming ANN,
 matryoshka truncation recall, int4 quantization error).
 
-Same staging contract and house discipline as ``staged_r6/7/8``:
-own ``STAGED_R9`` dict + leak guard (tests/test_staged_r9.py), exact
-scaled-integer arithmetic everywhere a value is graded, integral
-``div`` (== DuckDB ``//`` on non-negative ints, guarded by ``nullif``
-where a zero divisor is reachable), irrational terms (ln/cos/sqrt)
-quantized to an integer grid BEFORE any cross-row aggregation, and a
-100 TB scale note per op.
+House discipline: exact scaled-integer arithmetic everywhere a value
+is graded, integral ``div`` (== DuckDB ``//`` on non-negative ints,
+guarded by ``nullif`` where a zero divisor is reachable), irrational
+terms (ln/cos/sqrt) quantized to an integer grid BEFORE any cross-row
+aggregation, and a 100 TB scale note per op.
 """
 
 from __future__ import annotations
@@ -24,21 +21,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from etl_intraday_bidask_spark.functions.parity import scaled_long
-from etl_intraday_bidask_spark.registry import QuerySpec, SparkFn
+from etl_intraday_bidask_spark.registry import register
 from etl_intraday_bidask_spark.tables import load
 
-STAGED_R9: dict[str, QuerySpec] = {}
 
-
-def staged9(name: str, oracle_sql: str | None, description: str = ""):
-    def deco(fn: SparkFn) -> SparkFn:
-        STAGED_R9[name] = QuerySpec(name, fn, oracle_sql, description)
-        return fn
-
-    return deco
-
-
-@staged9(
+@register(
     "ts_backtest_linear_origins",
     oracle_sql="""
         WITH daily AS (
@@ -162,7 +149,7 @@ def ts_backtest_linear_origins(
     )
 
 
-@staged9(
+@register(
     "ts_stl_lite_hourly",
     oracle_sql="""
         WITH hourly AS (
@@ -272,7 +259,7 @@ def ts_stl_lite_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged9(
+@register(
     "ts_changepoint_binseg",
     oracle_sql="""
         WITH daily AS (
@@ -365,7 +352,7 @@ def ts_changepoint_binseg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged9(
+@register(
     "ts_spectral_goertzel_daily",
     oracle_sql="""
         WITH hourly AS (
@@ -450,7 +437,7 @@ def ts_spectral_goertzel_daily(
     )
 
 
-@staged9(
+@register(
     "ts_hampel_outliers",
     oracle_sql="""
         WITH hourly AS (
@@ -539,7 +526,7 @@ def ts_hampel_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged9(
+@register(
     "ts_mase_seasonal_naive",
     oracle_sql="""
         WITH hourly AS (
@@ -623,7 +610,7 @@ def ts_mase_seasonal_naive(
     )
 
 
-@staged9(
+@register(
     "ts_seasonal_strength",
     oracle_sql="""
         WITH hourly AS (
@@ -751,7 +738,7 @@ def ts_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged9(
+@register(
     "bidask_amihud_illiquidity",
     oracle_sql="""
         WITH base AS (
@@ -836,7 +823,7 @@ def bidask_amihud_illiquidity(
     )
 
 
-@staged9(
+@register(
     "bidask_vpin_volume_buckets",
     oracle_sql="""
         WITH signed AS (
@@ -953,7 +940,7 @@ def bidask_vpin_volume_buckets(
     )
 
 
-@staged9(
+@register(
     "bidask_garman_klass_vol",
     oracle_sql="""
         WITH base AS (
@@ -1067,7 +1054,7 @@ def bidask_garman_klass_vol(
     )
 
 
-@staged9(
+@register(
     "bidask_rv_signature_plot",
     oracle_sql="""
         WITH quotes AS (
@@ -1170,7 +1157,7 @@ def bidask_rv_signature_plot(
     )
 
 
-@staged9(
+@register(
     "bidask_trade_size_profile",
     oracle_sql="""
         WITH trades AS (
@@ -1240,7 +1227,7 @@ def bidask_trade_size_profile(
     )
 
 
-@staged9(
+@register(
     "gov_k_anonymity_census",
     oracle_sql="""
         WITH qi AS (
@@ -1315,7 +1302,7 @@ def gov_k_anonymity_census(
     )
 
 
-@staged9(
+@register(
     "gov_l_diversity_audit",
     oracle_sql="""
         WITH joined AS (
@@ -1368,7 +1355,7 @@ def gov_l_diversity_audit(
     )
 
 
-@staged9(
+@register(
     "gov_forget_cascade_audit",
     oracle_sql="""
         WITH forget AS (
@@ -1455,7 +1442,7 @@ def gov_forget_cascade_audit(
     )
 
 
-@staged9(
+@register(
     "gov_partition_skew_audit",
     oracle_sql="""
         WITH parts AS (
@@ -1536,7 +1523,7 @@ def gov_partition_skew_audit(
     )
 
 
-@staged9(
+@register(
     "attr_time_decay",
     oracle_sql="""
         WITH clicks AS (
@@ -1622,7 +1609,7 @@ def attr_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged9(
+@register(
     "attr_position_u_shaped",
     oracle_sql="""
         WITH clicks AS (
@@ -1718,7 +1705,7 @@ def attr_position_u_shaped(
     )
 
 
-@staged9(
+@register(
     "attr_campaign_overlap",
     oracle_sql="""
         WITH reach AS (
@@ -1822,7 +1809,7 @@ def attr_campaign_overlap(
     )
 
 
-@staged9(
+@register(
     "attr_incrementality_did",
     oracle_sql="""
         WITH cells AS (
@@ -2009,7 +1996,7 @@ def _markov_value_iteration_sql(rounds: int) -> str:
 _MARKOV_ROUNDS = 8
 
 
-@staged9(
+@register(
     "attr_markov_removal_effect",
     oracle_sql=_markov_value_iteration_sql(_MARKOV_ROUNDS),
     description="Markov removal-effect attribution for the click "
@@ -2140,7 +2127,7 @@ def attr_markov_removal_effect(
     )
 
 
-@staged9(
+@register(
     "embed_sign_hamming_ann",
     oracle_sql="""
         WITH exp AS (
@@ -2217,7 +2204,7 @@ def embed_sign_hamming_ann(
     return dists.orderBy("hamming", "vec_id").limit(10)
 
 
-@staged9(
+@register(
     "embed_matryoshka_recall",
     oracle_sql="""
         WITH exp AS (
@@ -2336,7 +2323,7 @@ def embed_matryoshka_recall(
     )
 
 
-@staged9(
+@register(
     "embed_int4_quant_error",
     oracle_sql="""
         WITH exp AS (
@@ -2428,7 +2415,7 @@ def embed_int4_quant_error(
     )
 
 
-@staged9(
+@register(
     "corpus_tokenizer_fertility",
     oracle_sql="""
         WITH toks AS (
@@ -2500,7 +2487,7 @@ def corpus_tokenizer_fertility(
     )
 
 
-@staged9(
+@register(
     "corpus_dup_threshold_curve",
     oracle_sql="""
         WITH toks AS (
@@ -2619,7 +2606,7 @@ def corpus_dup_threshold_curve(
     )
 
 
-@staged9(
+@register(
     "win_topk_with_ties",
     oracle_sql="""
         WITH ranked AS (
@@ -2689,7 +2676,7 @@ def win_topk_with_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged9(
+@register(
     "orders_order_to_cash_cycle",
     oracle_sql="""
         WITH cycles AS (
@@ -2756,7 +2743,7 @@ def orders_order_to_cash_cycle(
     )
 
 
-@staged9(
+@register(
     "bidask_corwin_schultz_spread",
     oracle_sql="""
         WITH base AS (
@@ -2870,7 +2857,7 @@ def bidask_corwin_schultz_spread(
     )
 
 
-@staged9(
+@register(
     "ts_tracking_signal",
     oracle_sql="""
         WITH daily AS (
@@ -2952,7 +2939,7 @@ def ts_tracking_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged9(
+@register(
     "attr_linear_multitouch",
     oracle_sql="""
         WITH clicks AS (
@@ -3019,7 +3006,7 @@ def attr_linear_multitouch(
     )
 
 
-@staged9(
+@register(
     "corpus_langid_confusion",
     oracle_sql="""
         WITH tok AS (
@@ -3079,7 +3066,7 @@ def corpus_langid_confusion(
     )
 
 
-@staged9(
+@register(
     "gov_pseudonymize_consistent",
     oracle_sql="""
         WITH pseudo_c AS (
@@ -3164,7 +3151,7 @@ def gov_pseudonymize_consistent(
     )
 
 
-@staged9(
+@register(
     "gov_pii_exposure_scan",
     oracle_sql="""
         WITH scans AS (
@@ -3253,7 +3240,7 @@ def gov_pii_exposure_scan(
     )
 
 
-@staged9(
+@register(
     "gov_access_tiering_plan",
     oracle_sql="""
         WITH last_touch AS (
@@ -3326,7 +3313,7 @@ def gov_access_tiering_plan(
     )
 
 
-@staged9(
+@register(
     "gov_column_profile_drift",
     oracle_sql="""
         WITH snap AS (
@@ -3420,7 +3407,7 @@ def gov_column_profile_drift(
     )
 
 
-@staged9(
+@register(
     "orders_calendar_heatmap",
     oracle_sql="""
         WITH cells AS (
@@ -3475,7 +3462,7 @@ def orders_calendar_heatmap(
     return cells.groupBy("dow").agg(*agg_cols).orderBy("dow")
 
 
-@staged9(
+@register(
     "dq_error_burst_poisson",
     oracle_sql="""
         WITH hourly AS (
@@ -3547,7 +3534,7 @@ def dq_error_burst_poisson(
     )
 
 
-@staged9(
+@register(
     "join_trigram_fuzzy_names",
     oracle_sql="""
         WITH grams AS (
@@ -3659,7 +3646,7 @@ def join_trigram_fuzzy_names(
     )
 
 
-@staged9(
+@register(
     "orders_price_elasticity_bands",
     oracle_sql="""
         WITH banded AS (
@@ -3748,7 +3735,7 @@ def orders_price_elasticity_bands(
     )
 
 
-@staged9(
+@register(
     "bidask_intraday_u_profile",
     oracle_sql="""
         WITH cells AS (
@@ -3809,7 +3796,7 @@ def bidask_intraday_u_profile(
     )
 
 
-@staged9(
+@register(
     "events_interarrival_burstiness",
     oracle_sql="""
         WITH gaps AS (
@@ -3887,7 +3874,7 @@ def events_interarrival_burstiness(
     )
 
 
-@staged9(
+@register(
     "graph_bipartite_projection",
     oracle_sql="""
         WITH bip AS (
@@ -3962,7 +3949,7 @@ def graph_bipartite_projection(
     return c1.crossJoin(F.broadcast(c2)).crossJoin(F.broadcast(c3))
 
 
-@staged9(
+@register(
     "graph_hits_hubs_authorities",
     oracle_sql="""
         WITH edges AS (
@@ -4106,7 +4093,7 @@ def graph_hits_hubs_authorities(
     return top_h.unionByName(top_a).orderBy("side", "rk")
 
 
-@staged9(
+@register(
     "lineitem_return_rate_monthly",
     oracle_sql="""
         SELECT CAST(epoch_us(date_trunc('month', l_shipdate))
@@ -4166,7 +4153,7 @@ def lineitem_return_rate_monthly(
     )
 
 
-@staged9(
+@register(
     "text_oov_rate_split",
     oracle_sql="""
         WITH split AS (
@@ -4249,7 +4236,7 @@ def text_oov_rate_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged9(
+@register(
     "ts_pacf_lag2_exact",
     oracle_sql="""
         WITH hourly AS (
@@ -4348,7 +4335,7 @@ def ts_pacf_lag2_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged9(
+@register(
     "scan_metadata_size_audit",
     oracle_sql=None,
     description="Small-file audit from REAL scan metadata: Spark's "
@@ -4386,7 +4373,7 @@ def scan_metadata_size_audit(
     )
 
 
-@staged9(
+@register(
     "multimodal_binary_dedup",
     oracle_sql="""
         WITH blobs AS (
@@ -4459,7 +4446,7 @@ def multimodal_binary_dedup(
     )
 
 
-@staged9(
+@register(
     "sql_unpivot_multi_measure",
     oracle_sql="""
         WITH monthly AS (

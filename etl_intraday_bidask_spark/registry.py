@@ -45,7 +45,10 @@ REGISTRY: dict[str, QuerySpec] = {}
 def register(
     name: str, oracle_sql: str | None, description: str = ""
 ) -> Callable[[SparkFn], SparkFn]:
-    """Decorator: register ``fn`` as the PySpark side of operator ``name``."""
+    """Decorator: register ``fn`` as the PySpark side of operator ``name``.
+
+    The only way an operator enters :data:`REGISTRY`; a duplicate name
+    raises."""
 
     def deco(fn: SparkFn) -> SparkFn:
         if name in REGISTRY:
@@ -54,17 +57,6 @@ def register(
         return fn
 
     return deco
-
-
-def activate_staged(staged: dict[str, QuerySpec]) -> None:
-    """Promote a staged wave (a dict of pre-verified QuerySpecs built by a
-    ``staged_r*`` module) into the global registry. Same duplicate check
-    as :func:`register`; called from ``operators/__init__`` when a wave's
-    grading round arrives."""
-    for name, spec in staged.items():
-        if name in REGISTRY:
-            raise ValueError(f"duplicate operator registration: {name}")
-        REGISTRY[name] = spec
 
 
 def load_all_operators() -> dict[str, QuerySpec]:

@@ -142,62 +142,32 @@ AUDITED = [
     "graph_link_prediction_jaccard",
     "orders_seasonal_index_monthly",
     "etl_merkle_reconcile",
+    # staged_r8..r11 leak-prone classes: per-user rank ties, global
+    # deciles, LOO encodings, iterative fixpoints, median-of-slopes,
+    # survival products.
+    "eval_ndcg_at5_per_user",
+    "eval_recall_at_k_per_user",
+    "eval_mrr_first_purchase",
+    "eval_lift_gain_deciles",
+    "eval_spearman_value_vs_time",
+    "sample_negative_hard_mining",
+    "feature_target_encode_loo",
+    "sample_group_kfold",
+    "corpus_dup_threshold_curve",
+    "ts_changepoint_binseg",
+    "gov_k_anonymity_census",
+    "attr_markov_removal_effect",
+    "events_kaplan_meier_weekly",
+    "ts_theil_sen_slope_daily",
+    "ts_runs_test_exact",
+    "graph_rich_club_topdeg",
+    "bidask_anchored_vwap_monthly",
 ]
 
 
 @pytest.mark.parametrize("name", AUDITED)
 def test_shuffle_partition_invariance(spark, name):
     fn = REGISTRY[name].spark_fn
-    original = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "3")
-        a = sorted(map(tuple, fn(spark, SF_SMALL).collect()))
-        spark.conf.set("spark.sql.shuffle.partitions", "29")
-        b = sorted(map(tuple, fn(spark, SF_SMALL).collect()))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", original)
-    assert a == b, f"{name}: result depends on shuffle partitioning"
-
-
-# --- staged waves D-G: same audit, pre-activation ---------------------
-# The staged dicts are not in the registry until their activation round;
-# sweep their leak-prone classes (per-user rank ties, global deciles,
-# LOO encodings, iterative fixpoints, median-of-slopes, survival
-# products) now so a partitioning leak never reaches a grading window.
-
-from etl_intraday_bidask_spark.operators.staged_r8 import STAGED_R8
-from etl_intraday_bidask_spark.operators.staged_r9 import STAGED_R9
-from etl_intraday_bidask_spark.operators.staged_r10 import STAGED_R10
-from etl_intraday_bidask_spark.operators.staged_r11 import STAGED_R11
-
-STAGED_AUDITED = [
-    (STAGED_R8, "eval_ndcg_at5_per_user"),
-    (STAGED_R8, "eval_recall_at_k_per_user"),
-    (STAGED_R8, "eval_mrr_first_purchase"),
-    (STAGED_R8, "eval_lift_gain_deciles"),
-    (STAGED_R8, "eval_spearman_value_vs_time"),
-    (STAGED_R8, "sample_negative_hard_mining"),
-    (STAGED_R8, "feature_target_encode_loo"),
-    (STAGED_R8, "sample_group_kfold"),
-    (STAGED_R9, "corpus_dup_threshold_curve"),
-    (STAGED_R9, "ts_changepoint_binseg"),
-    (STAGED_R9, "gov_k_anonymity_census"),
-    (STAGED_R9, "attr_markov_removal_effect"),
-    (STAGED_R10, "events_kaplan_meier_weekly"),
-    (STAGED_R11, "ts_theil_sen_slope_daily"),
-    (STAGED_R11, "ts_runs_test_exact"),
-    (STAGED_R11, "graph_rich_club_topdeg"),
-    (STAGED_R11, "bidask_anchored_vwap_monthly"),
-]
-
-
-@pytest.mark.parametrize(
-    "wave,name",
-    STAGED_AUDITED,
-    ids=[name for _, name in STAGED_AUDITED],
-)
-def test_staged_shuffle_partition_invariance(spark, wave, name):
-    fn = wave[name].spark_fn
     original = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "3")

@@ -5,10 +5,10 @@ iteration order IS part of the runtime surface (VERDICT.md round 1:
 
 from __future__ import annotations
 
+import glob
 import json
 import os
-
-import pytest
+import re
 
 import __spark_entry__ as entry
 from etl_intraday_bidask_spark.registry import load_all_operators
@@ -26,22 +26,6 @@ def test_queries_covers_registry_exactly():
     }
 
 
-def test_round2_window_targets_ungraded_ops():
-    """While only round 1 grades exist, the first 50 keys must be exactly
-    the round-1-ungraded operators plus the repaired dedup_simhash."""
-    r02 = os.path.join(REPO, "CORRECTNESS_r02.json")
-    if os.path.exists(r02):
-        return  # hand-built window only applies before round-2 grades land
-    with open(os.path.join(REPO, "CORRECTNESS_r01.json")) as f:
-        graded_r1 = set(json.load(f))
-    window = list(entry.queries())[:50]
-    assert len(set(window)) == 50
-    regraded = [k for k in window if k in graded_r1]
-    assert regraded == ["dedup_simhash"], (
-        "only the round-1 hash-fail should burn a window slot on re-grading"
-    )
-
-
 def test_rotation_prefers_least_recently_graded():
     keys = ["a", "b", "c", "d"]
     history = {"a": [1, 2], "b": [1], "d": [2]}
@@ -49,6 +33,16 @@ def test_rotation_prefers_least_recently_graded():
     # c never graded -> first; b graded once in r1 before d's once in r2;
     # a graded twice -> last.
     assert order == ["c", "b", "d", "a"]
+
+
+def test_rotation_breaks_history_ties_by_name():
+    """Keys with the same (failed, times graded, last round) sort by
+    name, whatever order they arrive in."""
+    history = {"b": [3], "a": [3], "c": [1, 3], "d": [2]}
+    order = entry.rotation_order(["c", "z", "b", "a", "y", "d"], history)
+    assert order == ["y", "z", "d", "a", "b", "c"]
+    order = entry.rotation_order(["d", "b", "a"], history, failed={"b", "a"})
+    assert order == ["a", "b", "d"]
 
 
 def test_rotation_puts_failed_keys_first():
@@ -62,17 +56,11 @@ def test_rotation_puts_failed_keys_first():
 
 
 def test_latest_failures_reads_most_recent_grade():
-    """_latest_failures: an op that ERRed in its most recent grade is
-    failed; one that failed earlier but passed later is not. Verified
-    against the real CORRECTNESS history: the two round-3 ERRs must be
-    flagged (until a later round re-grades them green)."""
-    fails = entry._latest_failures()
-    import json
-
+    """_grading_record's failed set: an op that ERRed in its most recent
+    grade is failed; one that failed earlier but passed later is not.
+    Verified against the real CORRECTNESS history."""
+    _, fails = entry._grading_record()
     latest_grade: dict[str, tuple[int, dict]] = {}
-    import glob
-    import re
-
     for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
         rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
         with open(path) as f:
@@ -91,35 +79,11 @@ def test_latest_failures_reads_most_recent_grade():
 
 def test_rotation_is_deterministic_and_total():
     registry = load_all_operators()
-    history = entry._grading_history()
+    history = entry._grading_record()[0]
     o1 = entry.rotation_order(list(registry), history)
     o2 = entry.rotation_order(list(reversed(list(registry))), history)
     assert o1 == o2
     assert sorted(o1) == sorted(registry)
-
-
-def test_round3_window_would_cover_never_graded_ops():
-    """Simulated round-3 state: r01 graded its 50, r02 will grade the
-    hand-built window; every operator added since (never graded) must
-    lead the rotated order, followed by the least-recently-graded."""
-    registry = load_all_operators()
-    with open(os.path.join(REPO, "CORRECTNESS_r01.json")) as f:
-        r01 = list(json.load(f))
-    r02 = entry._GRADING_PRIORITY[:50]
-    history: dict[str, list[int]] = {}
-    for k in r01:
-        history.setdefault(k, []).append(1)
-    for k in r02:
-        history.setdefault(k, []).append(2)
-    order = entry.rotation_order(list(registry), history)
-    never_graded = [k for k in registry if k not in history]
-    window = order[: max(50, len(never_graded))]
-    assert set(never_graded) <= set(window)
-    # Within the window, never-graded ops come before any regraded op.
-    first_graded_pos = min(
-        (order.index(k) for k in order if k in history), default=len(order)
-    )
-    assert all(order.index(k) < first_graded_pos for k in never_graded)
 
 
 # Canonical post-load dtypes for the ten fixture tables. One fixture
@@ -244,8 +208,6 @@ def test_survey_inventory_count_matches_registry():
     """SURVEY.md §2 is the binding contract; its declared inventory count
     must equal the executable registry so the table and code cannot
     drift silently."""
-    import re
-
     registry = load_all_operators()
     with open(os.path.join(REPO, "SURVEY.md")) as f:
         survey = f.read()
@@ -317,8 +279,7 @@ def test_window_invariant_failed_then_never_then_stalest():
     window leads with latest-failed keys, then never-graded keys, then
     everything else in ascending (times graded, last round graded)."""
     registry = load_all_operators()
-    history = entry._grading_history()
-    failed = entry._latest_failures()
+    history, failed = entry._grading_record()
     order = entry.rotation_order(list(registry), history, failed)
     assert sorted(order) == sorted(registry)
     n_failed = len(failed & set(registry))
@@ -332,35 +293,13 @@ def test_window_invariant_failed_then_never_then_stalest():
     )
 
 
-def test_next_window_matches_pending_wave():
-    """With the latest activated wave not yet driver-graded, its keys
-    are exactly the never-graded set and therefore fill the next 50-slot
-    window. Conditioned on on-disk state (skips once the driver has
-    graded the wave) so it cannot go stale like its round-5
-    predecessor."""
-    registry = load_all_operators()
-    history = entry._grading_history()
-    never = {k for k in registry if k not in history}
-    wave = set(entry._DEFER_NEW_R11)
-    if not never & wave:
-        pytest.skip("latest wave already driver-graded")
-    assert never == wave, (
-        "never-graded keys and the activated wave diverge: "
-        f"extra={sorted(never - wave)} missing={sorted(wave - never)}"
-    )
-    order = entry.rotation_order(
-        list(registry), history, entry._latest_failures()
-    )
-    assert set(order[:50]) == wave
-
-
 def test_rotation_cannot_starve_any_key():
     """Simulate grading forward from the real on-disk history: within
     ceil(N/50)+1 rounds every registered key gets (re)graded at least
     once — the rotation has no starvation hole, whatever the current
     state."""
     registry = load_all_operators()
-    history = {k: list(v) for k, v in entry._grading_history().items()}
+    history = {k: list(v) for k, v in entry._grading_record()[0].items()}
     cur = max((r for rs in history.values() for r in rs), default=0)
     rounds_needed = -(-len(registry) // 50) + 1
     for r in range(cur + 1, cur + 1 + rounds_needed):

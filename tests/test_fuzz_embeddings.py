@@ -23,10 +23,6 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from etl_intraday_bidask_spark.operators.staged_r6 import STAGED
-from etl_intraday_bidask_spark.operators.staged_r7 import STAGED_R7
-from etl_intraday_bidask_spark.operators.staged_r8 import STAGED_R8
-from etl_intraday_bidask_spark.operators.staged_r9 import STAGED_R9
 from etl_intraday_bidask_spark.registry import load_all_operators
 from etl_intraday_bidask_spark.tables import TABLE_NAMES
 from tests.conftest import SF_SMALL
@@ -45,7 +41,7 @@ REGISTERED_EMB_OPS = [
     "dedup_embedding_cosine",
     "embed_centroid_stats",
 ]
-STAGED_EMB_OPS = [
+WAVE_EMB_OPS = [
     "embed_norm_histogram",     # wave C
     "embed_drift_split_halves", # wave C
     "embed_class_separation",   # wave B
@@ -115,18 +111,8 @@ def _assert_emb_parity(spark, variant: str) -> None:
             f"SELECT * FROM read_parquet('{variant}/{name}.parquet')"
         )
     try:
-        specs = [(op, REGISTRY[op]) for op in REGISTERED_EMB_OPS]
-        specs += [
-            (
-                op,
-                STAGED.get(op)
-                or STAGED_R7.get(op)
-                or STAGED_R8.get(op)
-                or STAGED_R9[op],
-            )
-            for op in STAGED_EMB_OPS
-        ]
-        for op, spec in specs:
+        for op in REGISTERED_EMB_OPS + WAVE_EMB_OPS:
+            spec = REGISTRY[op]
             df = spec.spark_fn(spark, variant)
             s_rows, s_cols = df.collect(), df.columns
             rel = con.sql(spec.oracle_sql)

@@ -1,20 +1,17 @@
-"""Activation-time dtype guards, applied to the staged backlog NOW.
+"""Registry-wide dtype policy, checked without executing anything.
 
-Round-7 lesson: `subquery_correlated_scalar` staged with an oracle
-whose share column was HUGEINT (an uncast correlated `sum(BIGINT)`
-divisor) and the staged harness didn't notice — the hole only
-surfaced when wave C activated and `tests/test_parity.py`'s
-`assert_dtype_parity` first saw the op. The driver's hash happened to
-survive (the values fit float64 losslessly), but that is luck, not
-policy: pandas coerces int128 to float64, which is exactly how
-`dedup_simhash` hash-failed in round 1. This module runs the same
-dtype guard over EVERY staged wave so the next such oracle fails the
-day it is staged, four rounds before it can reach a grading window.
+For every operator with an oracle, the Spark plan's output dtypes and
+the DuckDB oracle's column types must agree in kind, and no oracle
+column may be HUGEINT. pandas coerces int128 to float64, which is how
+`dedup_simhash` hash-failed in round 1; an uncast correlated
+`sum(BIGINT)` divisor in `subquery_correlated_scalar` once slipped a
+HUGEINT share column past a value-only check. This module runs in the
+default tier, so a dtype drift anywhere in the registry fails Tier-1.
 
 Scalar columns get the full engine-kind comparison from test_parity;
-nested types (array/map/struct — a handful of staged ops emit them)
-only assert the HUGEINT ban, since the verbatim-kind clause would
-false-positive on spelling (`array<bigint>` vs `BIGINT[]`).
+nested types (array/map/struct) only assert the HUGEINT ban, since the
+verbatim-kind clause would false-positive on spelling (`array<bigint>`
+vs `BIGINT[]`).
 
 Cheap by construction: Spark dtypes come from plan analysis and
 DuckDB types from relation planning — nothing executes.
@@ -24,20 +21,8 @@ from __future__ import annotations
 
 import pytest
 
-from etl_intraday_bidask_spark.operators.staged_r8 import STAGED_R8
-from etl_intraday_bidask_spark.operators.staged_r9 import STAGED_R9
-from etl_intraday_bidask_spark.operators.staged_r10 import STAGED_R10
-from etl_intraday_bidask_spark.operators.staged_r11 import STAGED_R11
-from etl_intraday_bidask_spark.operators.staged_r12 import STAGED_R12
 from tests.conftest import SF_SMALL
-from tests.test_parity import _SPARK_KIND, _duck_kind
-
-ALL_STAGED = {}
-for _wave in (STAGED_R8, STAGED_R9, STAGED_R10, STAGED_R11,
-              STAGED_R12):
-    ALL_STAGED.update(_wave)
-
-ORACLED = sorted(n for n, s in ALL_STAGED.items() if s.oracle_sql)
+from tests.test_parity import HASH_CHECKED, REGISTRY, _SPARK_KIND, _duck_kind
 
 
 def _is_nested(t: str) -> bool:
@@ -47,9 +32,9 @@ def _is_nested(t: str) -> bool:
     return any(k in t for k in ("array", "map", "struct", "[]", "(", "<"))
 
 
-@pytest.mark.parametrize("name", ORACLED)
+@pytest.mark.parametrize("name", HASH_CHECKED)
 def test_staged_dtype_parity(spark, duck_small, name):
-    spec = ALL_STAGED[name]
+    spec = REGISTRY[name]
     s_types = dict(spec.spark_fn(spark, SF_SMALL).dtypes)
     rel = duck_small.sql(spec.oracle_sql)
     d_types = {c: str(t).upper() for c, t in zip(rel.columns, rel.types)}

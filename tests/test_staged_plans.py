@@ -1,19 +1,18 @@
-"""Physical-plan audits for the staged round-6 wave B
-(operators/staged_r6b.py): each op's scale claim names a plan property
-— assert it before activation, same discipline as tests/test_plans.py
-but driven off the STAGED dict since the wave is unregistered."""
+"""Physical-plan audits for the staged_r* operator modules: each op's
+scale claim names a plan property — same discipline as
+tests/test_plans.py."""
 
 from __future__ import annotations
 
 import contextlib
 import io
 
-from etl_intraday_bidask_spark.operators.staged_r6 import STAGED
 from tests.conftest import SF_SMALL
+from tests.test_parity import REGISTRY, module_keys
 
 
-def staged_plan(spark, name: str) -> str:
-    df = STAGED[name].spark_fn(spark, SF_SMALL)
+def plan_of(spark, name: str) -> str:
+    df = REGISTRY[name].spark_fn(spark, SF_SMALL)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
@@ -25,7 +24,7 @@ def test_sweepline_no_cartesian_single_running_window(spark):
     day-spine range join: no nested-loop/cartesian anywhere, and the
     only Window is the one running sum over the pre-combined day
     grain."""
-    plan = staged_plan(spark, "agg_concurrent_intervals")
+    plan = plan_of(spark, "agg_concurrent_intervals")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert plan.count("(Window") + plan.count(") Window") >= 1
@@ -39,7 +38,7 @@ def test_active_users_uses_explode_not_range_join(spark):
     """events_active_users_rolling claims bounded explode fan-out of the
     (day,user) grain instead of a day-range join: Generate (explode)
     must be present and no nested-loop join may appear."""
-    plan = staged_plan(spark, "events_active_users_rolling")
+    plan = plan_of(spark, "events_active_users_rolling")
     assert "Generate" in plan, "explode fan-out missing from plan"
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -49,7 +48,7 @@ def test_cms_is_pure_equi_join_aggregate(spark):
     """agg_heavy_hitters_cms: the sketch build/probe is hash joins and
     aggregates over md5 arithmetic — JVM-side end to end, no Python
     eval, no nested loop."""
-    plan = staged_plan(spark, "agg_heavy_hitters_cms")
+    plan = plan_of(spark, "agg_heavy_hitters_cms")
     for banned in (
         "CartesianProduct",
         "BroadcastNestedLoopJoin",
@@ -64,7 +63,7 @@ def test_bitemporal_pit_joins_on_custkey_equi(spark):
     custkey (fan-out bounded by the 3 versions), with the valid_from
     inequality as a post-join condition — never a nested loop over
     orders x versions."""
-    plan = staged_plan(spark, "join_bitemporal_pit")
+    plan = plan_of(spark, "join_bitemporal_pit")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert ("BroadcastHashJoin" in plan) or ("SortMergeJoin" in plan)
@@ -73,7 +72,7 @@ def test_bitemporal_pit_joins_on_custkey_equi(spark):
 def test_ols_is_single_pass_aggregate(spark):
     """agg_ols_normal_equations is one map-side-combinable aggregate:
     no window, no join — the nine power sums reduce in one exchange."""
-    plan = staged_plan(spark, "agg_ols_normal_equations")
+    plan = plan_of(spark, "agg_ols_normal_equations")
     assert "Window" not in plan
     for banned in ("SortMergeJoin", "BroadcastHashJoin", "CartesianProduct"):
         assert banned not in plan
@@ -83,7 +82,7 @@ def test_ols_is_single_pass_aggregate(spark):
 def test_roll_spread_partitions_by_day(spark):
     """bidask_roll_spread windows partition by day — the plan must not
     contain a global (empty-partition-spec) window sort."""
-    plan = staged_plan(spark, "bidask_roll_spread")
+    plan = plan_of(spark, "bidask_roll_spread")
     assert "CartesianProduct" not in plan
     # every Window's partition spec carries the day column d
     for seg in plan.split("Arguments: ")[1:]:
@@ -96,7 +95,7 @@ def test_revenue_bridge_pushes_year_filter(spark):
     """orders_revenue_bridge filters to two years before aggregating;
     the year predicate must reach the scan (as a pushed filter or a
     scan-adjacent Filter), and the plan is join-free."""
-    plan = staged_plan(spark, "orders_revenue_bridge")
+    plan = plan_of(spark, "orders_revenue_bridge")
     for banned in ("SortMergeJoin", "BroadcastHashJoin", "CartesianProduct"):
         assert banned not in plan
     pushed = plan.split("PushedFilters:")[1].split("\n")[0]
@@ -105,24 +104,14 @@ def test_revenue_bridge_pushes_year_filter(spark):
     )
 
 
-# --- wave C (staged_r7) plan audits ---
-
-from etl_intraday_bidask_spark.operators.staged_r7 import STAGED_R7
-
-
-def staged7_plan(spark, name: str) -> str:
-    df = STAGED_R7[name].spark_fn(spark, SF_SMALL)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+# --- staged_r7 plan audits ---
 
 
 def test_merkle_digests_are_pure_aggregates(spark):
     """etl_merkle_reconcile's whole point is mergeable sum-of-digest
     buckets: hash aggregates + one equi join on bucket, no Python
     eval, no nested loop, no window."""
-    plan = staged7_plan(spark, "etl_merkle_reconcile")
+    plan = plan_of(spark, "etl_merkle_reconcile")
     for banned in (
         "CartesianProduct",
         "BroadcastNestedLoopJoin",
@@ -138,7 +127,7 @@ def test_market_beta_broadcasts_market_series(spark):
     """The hourly market series must BROADCAST onto the (user, hour)
     grain — shuffling the fact side against a calendar-bounded series
     would be backwards."""
-    plan = staged7_plan(spark, "bidask_market_beta_per_user")
+    plan = plan_of(spark, "bidask_market_beta_per_user")
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
@@ -147,7 +136,7 @@ def test_ols_and_corr_are_join_free_single_aggregates(spark):
     """The exact-moment statistics reduce in one pass: no joins in the
     moment computation (corr's 3-row assembly unions scalar rows)."""
     for name in ("agg_corr_matrix_pairwise",):
-        plan = staged7_plan(spark, name)
+        plan = plan_of(spark, name)
         assert "SortMergeJoin" not in plan
         assert "CartesianProduct" not in plan
         assert "HashAggregate" in plan
@@ -157,7 +146,7 @@ def test_dup_payment_join_is_equi_on_amount(spark):
     """dq_duplicate_payment_detect claims amount-as-blocking-key: the
     self-join must be a hash/sort-merge EQUI join (custkey, cents),
     never a nested loop over all order pairs."""
-    plan = staged7_plan(spark, "dq_duplicate_payment_detect")
+    plan = plan_of(spark, "dq_duplicate_payment_detect")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert ("SortMergeJoin" in plan) or ("BroadcastHashJoin" in plan)
@@ -167,25 +156,20 @@ def test_cumulative_uniques_windows_on_day_grain_only(spark):
     """The growth curve's running sum must consume the per-day
     aggregate, not raw events: a HashAggregate must sit below the
     Window."""
-    plan = staged7_plan(spark, "events_cumulative_uniques")
+    plan = plan_of(spark, "events_cumulative_uniques")
     assert "HashAggregate" in plan
     assert plan.count("Exchange") >= 1
     assert "CartesianProduct" not in plan
 
 
-# ---- generic scale-killer sweep for waves D and E (round 6) --------
-# Same two assertions as tests/test_plan_sweep.py, driven off the
-# staged dicts: no unkeyed CartesianProduct (BroadcastNestedLoopJoin
+# ---- generic scale-killer sweep for staged_r8..r12 ------------------
+# Same two assertions as tests/test_plan_sweep.py: no unkeyed
+# CartesianProduct (BroadcastNestedLoopJoin
 # is allowed — every occurrence broadcasts a tiny side), and no Python
 # evaluation anywhere (neither wave declares a Python-boundary op).
 
 import pytest
 
-from etl_intraday_bidask_spark.operators.staged_r8 import STAGED_R8
-from etl_intraday_bidask_spark.operators.staged_r9 import STAGED_R9
-from etl_intraday_bidask_spark.operators.staged_r10 import STAGED_R10
-from etl_intraday_bidask_spark.operators.staged_r11 import STAGED_R11
-from etl_intraday_bidask_spark.operators.staged_r12 import STAGED_R12
 
 _PY_MARKERS = (
     "BatchEvalPython",
@@ -217,15 +201,16 @@ _SKIP_PLAN = {
     "graph_component_size_histogram",
 }
 
-_WAVE_DE = {**STAGED_R8, **STAGED_R9, **STAGED_R10, **STAGED_R11,
-            **STAGED_R12}
+_WAVE_DE = module_keys(
+    "staged_r8", "staged_r9", "staged_r10", "staged_r11", "staged_r12"
+)
 
 
 @pytest.mark.parametrize(
     "name", sorted(set(_WAVE_DE) - _SKIP_PLAN)
 )
 def test_wave_de_plan_has_no_scale_killers(spark, name):
-    df = _WAVE_DE[name].spark_fn(spark, SF_SMALL)
+    df = REGISTRY[name].spark_fn(spark, SF_SMALL)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")

@@ -1,71 +1,25 @@
-"""Parity tests for wave F (operators/staged_r10.py).
-
-Staged in round 6, ACTIVATED in round 10 — the registry-driven sweeps
-now cover these ops too; this file keeps the direct oracle-parity
-drive plus the activation guard that pins the round-10 window
-composition."""
+"""Oracle parity for the operators defined in ``operators/staged_r10.py``,
+one parametrized drive through ``tests.test_parity.assert_oracle_parity``,
+plus pins that the driver's value hash alone cannot make."""
 
 from __future__ import annotations
 
 import pytest
 
-from etl_intraday_bidask_spark.operators.staged_r10 import STAGED_R10
 from tests.conftest import SF_SMALL
-from tests.test_parity import normalize
+from tests.test_parity import REGISTRY, assert_oracle_parity, module_keys
+
+KEYS = module_keys("staged_r10")
 
 
-@pytest.mark.parametrize("name", sorted(STAGED_R10))
+@pytest.mark.parametrize("name", KEYS)
 def test_staged_r10_parity(spark, duck_small, name):
-    spec = STAGED_R10[name]
-    df = spec.spark_fn(spark, SF_SMALL)
-    s_rows, s_cols = df.collect(), df.columns
-    if spec.oracle_sql is None:
-        assert len(s_rows) >= 1
-        return
-    rel = duck_small.sql(spec.oracle_sql)
-    d_rows, d_cols = rel.fetchall(), list(rel.columns)
-    assert sorted(s_cols) == sorted(d_cols), (
-        f"{name}: columns {s_cols} vs {d_cols}"
-    )
-    assert len(s_rows) == len(d_rows), (
-        f"{name}: rows {len(s_rows)} vs {len(d_rows)}"
-    )
-    assert normalize(s_rows, s_cols) == normalize(d_rows, d_cols), (
-        f"{name}: value mismatch"
-    )
+    assert_oracle_parity(spark, duck_small, name)
 
 
 def test_wave_f_activated():
-    """Round 10 activated wave F: all 50 staged_r10 ops are in the
-    global registry with their exact staged specs, and the wave is
-    exactly the driver's 50-slot window (every key never-graded as of
-    r09, everything else green r1-r9)."""
-    import __spark_entry__ as entry
-    from etl_intraday_bidask_spark.operators.staged_r6 import STAGED
-    from etl_intraday_bidask_spark.operators.staged_r7 import STAGED_R7
-    from etl_intraday_bidask_spark.operators.staged_r8 import STAGED_R8
-    from etl_intraday_bidask_spark.operators.staged_r9 import STAGED_R9
-    from etl_intraday_bidask_spark.registry import load_all_operators
-
-    registry = load_all_operators()
-    assert len(STAGED_R10) == 50
-    missing = sorted(set(STAGED_R10) - set(registry))
-    assert not missing, f"wave-F ops not activated: {missing}"
-    for name, spec in STAGED_R10.items():
-        assert registry[name] is spec, f"{name}: registry spec diverged"
-    assert set(entry._DEFER_NEW_R10) == set(STAGED_R10), (
-        "_DEFER_NEW_R10 and the staged wave diverge"
-    )
-    overlap = sorted(
-        set(STAGED_R10)
-        & (
-            set(STAGED)
-            | set(STAGED_R7)
-            | set(STAGED_R8)
-            | set(STAGED_R9)
-        )
-    )
-    assert not overlap, f"wave F collides with earlier waves: {overlap}"
+    """Every operator defined in staged_r10 is registered: 50 keys."""
+    assert len(KEYS) == 50
 
 
 def test_state_store_rows_match_distinct_keys(spark):
@@ -74,7 +28,7 @@ def test_state_store_rows_match_distinct_keys(spark):
     the rows-only metrics op."""
     from etl_intraday_bidask_spark.tables import load
 
-    rows = STAGED_R10["stream_state_store_metrics"].spark_fn(
+    rows = REGISTRY["stream_state_store_metrics"].spark_fn(
         spark, SF_SMALL
     ).collect()
     assert rows, "no state operator metrics captured"
@@ -94,13 +48,13 @@ def test_reorder_policy_cross_consistent(spark):
     totals must agree."""
     eoq = {
         r["l_partkey"]: r
-        for r in STAGED_R10["parts_eoq_reorder_point"]
+        for r in REGISTRY["parts_eoq_reorder_point"]
         .spark_fn(spark, SF_SMALL)
         .collect()
     }
     ss = {
         r["l_partkey"]: r
-        for r in STAGED_R10["parts_safety_stock_plan"]
+        for r in REGISTRY["parts_safety_stock_plan"]
         .spark_fn(spark, SF_SMALL)
         .collect()
     }
@@ -113,7 +67,7 @@ def test_reorder_policy_cross_consistent(spark):
 def test_km_at_risk_monotone(spark):
     """Kaplan-Meier at-risk counts can only shrink with k, deaths are
     bounded by at-risk, and survival factors live in [0, 1e6] ppm."""
-    rows = STAGED_R10["events_kaplan_meier_weekly"].spark_fn(
+    rows = REGISTRY["events_kaplan_meier_weekly"].spark_fn(
         spark, SF_SMALL
     ).collect()
     prev = None
@@ -128,7 +82,7 @@ def test_km_at_risk_monotone(spark):
 def test_precision_curve_monotone_slots(spark):
     """P@k slots and hits are non-decreasing in k (supersets)."""
     rows = sorted(
-        STAGED_R10["eval_precision_at_k_curve"]
+        REGISTRY["eval_precision_at_k_curve"]
         .spark_fn(spark, SF_SMALL)
         .collect(),
         key=lambda r: r["k"],
@@ -141,18 +95,17 @@ def test_precision_curve_monotone_slots(spark):
 def test_score_histogram_totals_match_auc(spark):
     """The class-conditional histograms and the AUC op reduce the same
     scored stream: class totals must agree."""
-    from etl_intraday_bidask_spark.operators.staged_r8 import STAGED_R8
 
-    hist = STAGED_R10["eval_score_histogram_by_class"].spark_fn(
+    hist = REGISTRY["eval_score_histogram_by_class"].spark_fn(
         spark, SF_SMALL
     ).collect()
-    auc = STAGED_R8["eval_auc_exact"].spark_fn(spark, SF_SMALL).collect()[0]
+    auc = REGISTRY["eval_auc_exact"].spark_fn(spark, SF_SMALL).collect()[0]
     assert sum(r["n_pos"] for r in hist) == auc["n_pos"]
     assert sum(r["n_neg"] for r in hist) == auc["n_neg"]
 
 
 def test_simpson_diversity_in_range(spark):
-    rows = STAGED_R10["events_simpson_diversity"].spark_fn(
+    rows = REGISTRY["events_simpson_diversity"].spark_fn(
         spark, SF_SMALL
     ).collect()
     assert rows
@@ -165,7 +118,7 @@ def test_checkpoint_recovery_conserves_events(spark):
     the exactly-once census cross-checked against the batch count."""
     from etl_intraday_bidask_spark.tables import load
 
-    rows = STAGED_R10["stream_checkpoint_recovery"].spark_fn(
+    rows = REGISTRY["stream_checkpoint_recovery"].spark_fn(
         spark, SF_SMALL
     ).collect()
     n_total = load(spark, SF_SMALL, "events").count()
@@ -175,7 +128,7 @@ def test_checkpoint_recovery_conserves_events(spark):
 def test_set_semantics_orderings(spark):
     """UNION <= UNION ALL; INTERSECT <= min side; EXCEPT <= distinct
     side — the lattice every engine must respect."""
-    r = STAGED_R10["sql_set_dedup_semantics"].spark_fn(
+    r = REGISTRY["sql_set_dedup_semantics"].spark_fn(
         spark, SF_SMALL
     ).collect()[0]
     assert r["union_distinct"] <= r["union_all"]

@@ -1,57 +1,30 @@
-"""Parity tests for wave C (operators/staged_r7.py).
-
-Staged through rounds 5-6, ACTIVATED in round 7 — the registry-driven
-sweeps now cover these ops too; this file keeps the direct
-oracle-parity drive plus the activation guard that pins the round-7
-window composition."""
+"""Oracle parity for the operators defined in ``operators/staged_r7.py``,
+one parametrized drive through ``tests.test_parity.assert_oracle_parity``,
+plus pins that the driver's value hash alone cannot make."""
 
 from __future__ import annotations
 
 import pytest
 
-from etl_intraday_bidask_spark.operators.staged_r7 import STAGED_R7
 from tests.conftest import SF_SMALL
-from tests.test_parity import normalize
+from tests.test_parity import (
+    REGISTRY,
+    assert_oracle_parity,
+    module_keys,
+    normalize,
+)
+
+KEYS = module_keys("staged_r7")
 
 
-@pytest.mark.parametrize("name", sorted(STAGED_R7))
+@pytest.mark.parametrize("name", KEYS)
 def test_staged_r7_parity(spark, duck_small, name):
-    spec = STAGED_R7[name]
-    df = spec.spark_fn(spark, SF_SMALL)
-    s_rows, s_cols = df.collect(), df.columns
-    rel = duck_small.sql(spec.oracle_sql)
-    d_rows, d_cols = rel.fetchall(), list(rel.columns)
-    assert sorted(s_cols) == sorted(d_cols), (
-        f"{name}: columns {s_cols} vs {d_cols}"
-    )
-    assert len(s_rows) == len(d_rows), (
-        f"{name}: rows {len(s_rows)} vs {len(d_rows)}"
-    )
-    assert normalize(s_rows, s_cols) == normalize(d_rows, d_cols), (
-        f"{name}: value mismatch"
-    )
+    assert_oracle_parity(spark, duck_small, name)
 
 
 def test_wave_c_activated():
-    """Round 7 activated wave C: all 50 staged_r7 ops are in the global
-    registry with their exact staged specs, and the wave is exactly the
-    driver's 50-slot window (every key never-graded as of r06,
-    everything else green r1-r6)."""
-    import __spark_entry__ as entry
-    from etl_intraday_bidask_spark.registry import load_all_operators
-    from etl_intraday_bidask_spark.operators.staged_r6 import STAGED
-
-    registry = load_all_operators()
-    assert len(STAGED_R7) == 50
-    missing = sorted(set(STAGED_R7) - set(registry))
-    assert not missing, f"wave-C ops not activated: {missing}"
-    for name, spec in STAGED_R7.items():
-        assert registry[name] is spec, f"{name}: registry spec diverged"
-    assert set(entry._DEFER_NEW_R7) == set(STAGED_R7), (
-        "_DEFER_NEW_R7 and the staged wave diverge"
-    )
-    overlap = sorted(set(STAGED_R7) & set(STAGED))
-    assert not overlap, f"wave C collides with wave A/B names: {overlap}"
+    """Every operator defined in staged_r7 is registered: 50 keys."""
+    assert len(KEYS) == 50
 
 
 def test_dq_detectors_nonvacuous(spark, tmp_path):
@@ -103,7 +76,7 @@ def test_dq_detectors_nonvacuous(spark, tmp_path):
             ("dq_duplicate_payment_detect", 3),
             ("dq_key_gap_detect", 3),
         ]:
-            spec = STAGED_R7[op]
+            spec = REGISTRY[op]
             df = spec.spark_fn(spark, variant)
             s_rows, s_cols = df.collect(), df.columns
             rel = vcon.sql(spec.oracle_sql)

@@ -3,10 +3,9 @@
 `tests/test_determinism.py` audits the ~64 most partition-sensitive
 operators (rank ties, iterative fixpoints, remainder allocations) on
 every suite run. This tool is the one-off CERTIFICATION companion: it
-runs EVERY registered operator — and, with --staged, every staged
-wave-E..H operator — twice at sf0.001 under deliberately different
-shuffle layouts (spark.sql.shuffle.partitions 3 vs 29) and compares
-strict-canonical results. An operator whose output depends on the
+runs EVERY registered operator twice at sf0.001 under deliberately
+different shuffle layouts (spark.sql.shuffle.partitions 3 vs 29) and
+compares strict-canonical results. An operator whose output depends on the
 physical partitioning would pass oracle parity at one fixed config and
 still grade differently on someone else's cluster; this sweep proves
 none does.
@@ -18,7 +17,7 @@ are already rounded in-query (registry discipline), so a ulp-level
 sum-order difference between the two layouts would only surface if it
 crossed a rounding boundary — which is exactly what we want to catch.
 
-Usage:  python tools/invariance_sweep.py [--staged] [--sf SF_DIR]
+Usage:  python tools/invariance_sweep.py [--splits] [--sf SF_DIR]
 Output: one JSON line {total, passed, variant:[names], wall_sec}.
 """
 
@@ -70,7 +69,6 @@ def run_once(spark, fn, sf_dir: str, parts: str, split: str | None = None):
 
 
 def main() -> None:
-    include_staged = "--staged" in sys.argv
     # --splits: additionally vary the INPUT-split layout between the two
     # runs (maxPartitionBytes 1m vs 128m), so one pass certifies joint
     # invariance to both physical-layout axes Spark controls.
@@ -79,30 +77,13 @@ def main() -> None:
     if "--sf" in sys.argv:
         idx = sys.argv.index("--sf")
         if idx + 1 >= len(sys.argv):
-            sys.exit("usage: invariance_sweep.py [--staged] [--splits] "
-                     "[--sf SF_DIR]")
+            sys.exit("usage: invariance_sweep.py [--splits] [--sf SF_DIR]")
         sf_dir = sys.argv[idx + 1]
 
     from etl_intraday_bidask_spark.registry import load_all_operators
     from etl_intraday_bidask_spark.session import build_spark
 
-    specs = dict(load_all_operators())
-    if include_staged:
-        # ONLY the not-yet-activated waves: an activated wave's ops are
-        # already in load_all_operators(), and re-adding them as
-        # staged:<name> double-sweeps 50 ops per activated wave
-        # (round-9 review — waves D and E had accreted here). Round 12
-        # activated wave H, the FINAL wave — the backlog is empty, so
-        # --staged currently adds nothing.
-        for wave in ():
-            for name, spec in wave.items():
-                if name in specs:
-                    raise SystemExit(
-                        f"staged op {name} is already registered — "
-                        "remove its wave from the staged tuple"
-                    )
-                specs[f"staged:{name}"] = spec
-
+    specs = load_all_operators()
     spark = build_spark(app_name="invariance-sweep")
     spark.sparkContext.setLogLevel("ERROR")
 

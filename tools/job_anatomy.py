@@ -2,13 +2,14 @@
 
 Round-9 decomposed the per-query dispatch FLOOR (Catalyst planning +
 collect socket + one 2-stage probe job, ~67-80 ms idle, see
-tools/dispatch_study.py). This tool measures the other half of the
-composition story: how many AQE jobs each headline query executes.
-Under adaptive execution every shuffle or broadcast materialization
-point becomes its own scheduler job; SERIALIZED job levels each pay a
-fresh job-submission round (the dispatch study's probe-job bracket:
-~27-42 ms) that the single-floor subtraction in bench.py's `marginal`
-does NOT remove.
+BASELINE.md "Round-9 addendum: the floor decomposed to its three
+terms"). This tool measures the other half of the composition story:
+how many AQE jobs each headline query executes. Under adaptive
+execution every shuffle or broadcast materialization point becomes its
+own scheduler job; SERIALIZED job levels each pay a fresh
+job-submission round (the dispatch study's probe-job bracket: ~27-42
+ms) that the single-floor subtraction in bench.py's `marginal` does
+NOT remove.
 
 For every headline query this prints:
   - jobs:          AQE jobs executed, counted as the global job-ID
@@ -49,9 +50,10 @@ sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
-# Probe-job submission bracket measured by tools/dispatch_study.py
-# (round 9, BASELINE.md addendum): a trivial 2-stage job costs 27-42 ms
-# end to end once planning and the collect socket are excluded.
+# Probe-job submission bracket measured in round 9 (BASELINE.md,
+# "Round-9 addendum: the floor decomposed to its three terms"): a
+# trivial 2-stage job costs 27-42 ms end to end once planning and the
+# collect socket are excluded.
 JOB_MS_LO, JOB_MS_HI = 27.0, 42.0
 
 
