@@ -6,8 +6,11 @@ default /root/testdata/sf0.1; ``SPARK_GRAFT_CPUS`` local cores,
 default 32; ``SPARK_GRAFT_BENCH_RUNS`` timed runs per query, default 5).
 
 The query set mirrors BASELINE.md (measured DuckDB 1.0.0 on the same
-machine/fixtures). Timing = full materialization (``collect()``), after
-one untimed warm-up run per query; reported value is the median.
+machine/fixtures). Timing = full materialization (``toPandas()``), after
+one untimed warm-up run per query; reported value is the median. After
+its timed runs each query runs once more, untimed, under
+``etl_intraday_bidask_spark.metrics.measure``: its ``layers`` record in
+BENCH_DETAIL.json is read from Spark's status store.
 """
 
 from __future__ import annotations
@@ -19,8 +22,10 @@ import sys
 import time
 
 # Repo root on sys.path regardless of how we're invoked (script, -m,
-# or imported from tools/*): the floor bands import from tools.host_probe.
+# or imported from tools/*): the host probe lives in tools/.
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from tools import host_probe as hp  # noqa: E402
 
 HEADLINE = [
     "agg_pricing_summary",
@@ -57,25 +62,41 @@ DUCKDB_MS_SF01 = {
 }
 
 
-# Probe-job submission bracket measured in round 9 (BASELINE.md,
-# "Round-9 addendum: the floor decomposed to its three terms"): a
-# trivial 2-stage job costs 27-42 ms end to end once planning and the
-# collect socket are excluded. Each scheduler job a query runs BEYOND
-# its first is a serialized dispatch round the single-floor `marginal`
-# subtraction does not remove (round-10 job-anatomy study); the
-# adjusted band below subtracts them.
-JOB_MS_LO, JOB_MS_HI = 27.0, 42.0
+# Bench-scale session sizing, fixed for every recorded run.
+# AQE's per-stage runtime re-planning costs ~8-12% wall at sf0.1
+# steady state (measured warm: 4.18s AQE-on vs 3.72-3.86s off) while
+# its benefits (coalescing, skew splits) only exist at cluster scale —
+# the engine's session defaults keep it ON (session.py); the bench
+# measures fixture-scale dispatch, so it runs with AQE off.
+AQE = "false"
+# The sf0.1 fixtures are single ~1-11 MB parquet files; at the default
+# 128 MB split size every scan is ONE task and the scan-bound queries
+# run single-threaded. 4 MB splits parallelize the big scans across
+# cores (measured: 2.34s -> 2.03s over the six scan-heaviest headline
+# queries; 2m within noise of 4m, 1m over-splits). On a real lake the
+# default is right — files are many and 100-1000 MB — so this is bench
+# -scale sizing of the same knob, not a different strategy.
+SPLIT_BYTES = 4 * 1024 * 1024
+# Full-suite warm-up passes: JVM JIT, codegen caches, Parquet footer +
+# page cache. Measured at sf0.1: without them the first queries carry
+# ~2x JIT cost (whole suite 5.2s cold vs 3.7s steady-state) — the
+# steady state is what a long-lived cluster session actually runs at.
+WARMUP_PASSES = 2
+
+# Engine constants the bar leaves out (BASELINE.md round-14 addendum):
+# json_get is Jackson-vs-vectorized JSON parse throughput on an
+# already-minimal 1-job plan, A/B'd and refused twice; the gap
+# amortizes with scale (31.9x at 10x, 21.7x at 100x).
+BAR_EXCLUDED = ("json_get",)
 
 
-def bar_reading(
-    marginal: dict, live_anchor: dict, probe_verdict: str, exclude=()
-) -> dict:
+def bar_reading(marginal: dict, live_anchor: dict, probe_verdict: str) -> dict:
     """Evaluate the live-anchored perf bar on one bench window.
 
     Thresholds (unchanged since bar_r12): suite live MARGINAL ratio
-    <= 2.8 AND >= 6 headliners <= 2.0x live marginal — >= 6 stays
-    absolute regardless of exclusions (10 included headliners under
-    bar_r14), so excluding a query never makes the count easier.
+    <= 2.8 AND >= 6 headliners <= 2.0x live marginal, over the
+    headliners not in BAR_EXCLUDED — >= 6 stays absolute, so an
+    exclusion never makes the count easier.
     Evaluability is the round-13 three-way probe rule:
       ok           -> pass in {true, false}
       jvm_degraded -> the window inflates ONLY Spark's side of the
@@ -83,19 +104,13 @@ def bar_reading(
                       recorded true; a FAIL is indistinguishable from
                       the window and recorded null
       degraded     -> pass: null (absolute numbers grade the host)
-    ONE implementation shared by bar_r13 (no exclusions — the
-    continuity series) and bar_r14 (json_get excluded as a named
-    engine constant), so a future threshold recalibration cannot
-    desynchronize the two readings — the drift class ADVICE r13
-    flagged for the crossover probe's duplicated floor bands.
     """
     bar: dict = {
         "basis": "live_same_process_anchors",
         "probe_verdict": probe_verdict,
+        "excluded_engine_constants": sorted(BAR_EXCLUDED),
     }
-    if exclude:
-        bar["excluded_engine_constants"] = sorted(exclude)
-    anchors = {n: d for n, d in live_anchor.items() if n not in exclude}
+    anchors = {n: d for n, d in live_anchor.items() if n not in BAR_EXCLUDED}
     if not anchors:
         # ADVICE r12: the no-live-anchor case must still carry an
         # explicit not-evaluable marker, not a missing key.
@@ -104,12 +119,7 @@ def bar_reading(
         return bar
     ratio = round(sum(marginal[n] for n in anchors) / sum(anchors.values()), 2)
     n_le2 = sum(1 for n, d in anchors.items() if marginal[n] / d <= 2.0)
-    key = (
-        "suite_marginal_ratio_live_excl"
-        if exclude
-        else "suite_marginal_ratio_live"
-    )
-    bar[key] = ratio
+    bar["suite_marginal_ratio_live_excl"] = ratio
     bar["suite_ok"] = ratio <= 2.8
     bar["queries_le_2x_live_marginal"] = n_le2
     bar["queries_ok"] = n_le2 >= 6
@@ -134,113 +144,42 @@ def bar_reading(
     return bar
 
 
-def count_jobs(spark, thunk) -> int:
-    """Scheduler jobs submitted by ``thunk``, by sentinel job-ID delta.
-
-    Two `spark.range(1).count()` sentinels bracket the run, each under
-    its own fresh job group set from this thread; Spark job IDs are one
-    global monotone counter, so jobs = min(after IDs) - max(before IDs)
-    - 1 regardless of which driver thread submitted them (broadcast
-    builds run on cached thread pools whose job-GROUP attribution is
-    unreliable — round-10 ADVICE — but their IDs still land between the
-    sentinels). Single-threaded caller required, true for this bench.
-    """
-    sc = spark.sparkContext
-    st = sc.statusTracker()
-    tok = count_jobs._seq = getattr(count_jobs, "_seq", 0) + 1
-    g_before, g_after = f"bench_sent_{tok}a", f"bench_sent_{tok}b"
-    sc.setJobGroup(g_before, "sentinel-before")
-    spark.range(1).count()
-    before = max(st.getJobIdsForGroup(g_before))
-    sc.setJobGroup(f"bench_probe_{tok}", "probe")
-    thunk()
-    sc.setJobGroup(g_after, "sentinel-after")
-    spark.range(1).count()
-    after = min(st.getJobIdsForGroup(g_after))
-    return after - before - 1
-
-
 def run_host_probe(sf_dir: str) -> dict:
     """Pre-flight host-health probe (round-11 finding, round-12 bar
     gate): the microVM host degrades for long stretches with zero local
     load, moving Spark AND DuckDB walls together — absolute numbers from
-    a degraded window measure the machine, not the tree. Reuses
-    tools/host_probe.py's python-loop and DuckDB-scan probes (the
-    Spark-floor leg is covered by this bench's own warmed floor, checked
-    against the warmed band after measurement — building a second JVM
-    here would double the bench's startup cost). The combined verdict is
-    finalized in main() once the warmed floor exists."""
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from tools import host_probe as hp
-
-    probe: dict = {"py_loop_ms": round(hp.py_loop_ms(), 1)}
-    old = hp.SF_DIR
-    try:
-        hp.SF_DIR = sf_dir
-        probe["duck_scan_ms"] = round(hp.duck_scan_ms(), 1)
-    except Exception as ex:
-        probe["duck_scan_ms"] = None
-        probe["duck_error"] = type(ex).__name__
-    finally:
-        # ADVICE r12: restore unconditionally — a raising duck_scan_ms
-        # must not leave the module-level SF_DIR pointed at the bench dir
-        # for the rest of the process.
-        hp.SF_DIR = old
-    probe["healthy_bands"] = {
-        "py_loop_ms": hp.HEALTHY["py_loop_ms"],
-        "duck_scan_ms": hp.HEALTHY["duck_scan_ms"],
-        "warmed_floor_ms": WARMED_FLOOR_HEALTHY_MS,
-    }
-    probe["workable_bands"] = {
-        "warmed_floor_ms": WARMED_FLOOR_WORKABLE_MS,
-    }
+    a degraded window measure the machine, not the tree. Runs
+    tools/host_probe.py's python-loop and DuckDB-scan legs (the
+    Spark-floor leg is this bench's own warmed floor, graded after
+    warm-up — building a second JVM here would double the bench's
+    startup cost); main() records the combined verdict once the warmed
+    floor exists."""
+    probe = hp.preflight(sf_dir)
+    probe["healthy_bands"] = dict(hp.WARMED_HEALTHY)
+    probe["workable_bands"] = {"warmed_floor_ms": hp.WARMED_FLOOR_WORKABLE_MS}
     return probe
 
 
-# Warmed-session dispatch-floor bands, recalibrated round 13 (VERDICT
-# r12 item 1 — the round-9/10 band of 80 ms was missed by 1.5 ms on the
-# best round-12 machine-day, so the probe-gated bar recorded pass: null
-# for an entire session and could not drive work).
-#
-# HEALTHY <= 95 ms: rounds 9-10 measured 64-75 ms; round-12 run7
-# (floor 92.5 ms) produced the best hist-marginal reading of rounds
-# 9-12 (1.37x) with a live marginal (2.95x) consistent with round-11's
-# healthy-window 2.91x — evidence that <=95 ms windows read the engine,
-# not the machine-day.
-#
-# WORKABLE <= 160 ms: a JVM-dispatch-degraded-but-workable window.
-# JVM-path degradation inflates ONLY Spark's side of the live ratio
-# (the in-process DuckDB anchors don't run on the JVM), so a bar PASS
-# on such a window is conservative-valid and is recorded as pass: true;
-# a FAIL is indistinguishable from the window and stays pass: null.
-# Floors past 160 ms (round-12's deepest window read 173 ms and suite
-# 6.41 s) grade the host — bar not evaluable. Recalibration provenance:
-# BASELINE.md round-13 addendum. The values live in tools/host_probe.py
-# next to HEALTHY (ADVICE r13: crossover_bench.py shares them; literals
-# in two files could desynchronize the probes' verdicts on the next
-# recalibration).
-from tools.host_probe import (  # noqa: E402
-    WARMED_FLOOR_HEALTHY_MS,
-    WARMED_FLOOR_WORKABLE_MS,
-)
+def refuse_if_degraded(probe: dict, spark=None) -> None:
+    """With SPARK_GRAFT_REQUIRE_HEALTHY=1, abort on a degraded window,
+    printing the probe as the one JSON line."""
+    if probe["verdict"].startswith("degraded") and os.environ.get(
+        "SPARK_GRAFT_REQUIRE_HEALTHY"
+    ) == "1":
+        print(json.dumps({"metric": "host_probe_refused", **probe}))
+        if spark is not None:
+            spark.stop()
+        sys.exit(3)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
     host_probe = run_host_probe(sf_dir)
-    pre_bad = [
-        k
-        for k in ("py_loop_ms", "duck_scan_ms")
-        if isinstance(host_probe.get(k), (int, float))
-        and host_probe[k] > host_probe["healthy_bands"][k]
-    ]
-    if pre_bad and os.environ.get("SPARK_GRAFT_REQUIRE_HEALTHY") == "1":
-        # Builder fast-path: the window is already provably bad before
-        # any JVM is built — don't spend 60s warming one.
-        host_probe["verdict"] = "degraded:" + ",".join(pre_bad)
-        print(json.dumps({"metric": "host_probe_refused", **host_probe}))
-        sys.exit(3)
+    # A window already provably bad before any JVM is built is refused
+    # without spending 60s warming one.
+    host_probe["verdict"] = hp.verdict(host_probe)
+    refuse_if_degraded(host_probe)
     # Infer sf from the directory name (e.g. ".../sf0.1" -> 0.1).
     base = os.path.basename(sf_dir.rstrip("/"))
     try:
@@ -248,6 +187,7 @@ def main() -> None:
     except ValueError:
         sf = None
 
+    from etl_intraday_bidask_spark.metrics import measure
     from etl_intraday_bidask_spark.registry import load_all_operators
     from etl_intraday_bidask_spark.session import build_spark
 
@@ -258,30 +198,10 @@ def main() -> None:
     shuffle = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "4"))
     spark = build_spark(app_name="etl-bidask-bench", shuffle_partitions=shuffle)
     spark.sparkContext.setLogLevel("ERROR")
-    # AQE's per-stage runtime re-planning costs ~8-12% wall at sf0.1
-    # steady state (measured warm: 4.18s AQE-on vs 3.72-3.86s off)
-    # while its benefits (coalescing, skew splits) only exist at
-    # cluster scale — the engine's session defaults keep it ON
-    # (session.py); the bench measures fixture-scale dispatch, so
-    # default it off here.
-    aqe = os.environ.get("SPARK_GRAFT_AQE", "false")
-    spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    # The sf0.1 fixtures are single ~1-11 MB parquet files; at the default
-    # 128 MB split size every scan is ONE task and the scan-bound queries
-    # run single-threaded. 4 MB splits parallelize the big scans across
-    # cores (measured: 2.34s -> 2.03s over the six scan-heaviest headline
-    # queries; 2m within noise of 4m, 1m over-splits). On a real lake the
-    # default is right — files are many and 100-1000 MB — so this is bench
-    # -scale sizing of the same knob, not a different strategy.
-    split = os.environ.get("SPARK_GRAFT_SPLIT_BYTES", "4194304")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", split)
+    spark.conf.set("spark.sql.adaptive.enabled", AQE)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(SPLIT_BYTES))
 
-    # Full-suite warm-up pass: JVM JIT, codegen caches, Parquet footer +
-    # page cache. Measured at sf0.1: without it the first queries carry
-    # ~2x JIT cost (whole suite 5.2s cold vs 3.7s steady-state) — the
-    # steady state is what a long-lived cluster session actually runs at.
-    warmup_passes = int(os.environ.get("SPARK_GRAFT_WARMUP_PASSES", "2"))
-    for _ in range(warmup_passes):
+    for _ in range(WARMUP_PASSES):
         for name in HEADLINE:
             registry[name].spark_fn(spark, sf_dir).toPandas()
 
@@ -292,12 +212,8 @@ def main() -> None:
     # at cluster scale it amortizes to noise. Reporting wall AND marginal
     # (wall - floor) makes the suite number interpretable without prose
     # (VERDICT r4 item 4).
-    floor_samples = []
-    for _ in range(15):
-        t0 = time.perf_counter()
-        spark.range(1).count()
-        floor_samples.append(time.perf_counter() - t0)
-    floor = round(statistics.median(floor_samples), 4)
+    host_probe["warmed_floor_ms"] = hp.warmed_floor_ms(spark)
+    floor = round(host_probe["warmed_floor_ms"] / 1000, 4)
 
     # Finalize the combined host-health verdict: pre-flight python/DuckDB
     # probes plus this session's warmed floor (the round-11 study showed
@@ -305,43 +221,14 @@ def main() -> None:
     # and DuckDB probes read healthy — trust the combination). The bench
     # never refuses to run (the grading driver needs its JSON line
     # regardless), it LABELS: a degraded verdict means the absolute
-    # numbers measure the machine-day and the round-12 bar below is
-    # recorded as not-evaluable. SPARK_GRAFT_REQUIRE_HEALTHY=1 (builder
-    # use) aborts instead, printing the probe as the one JSON line.
-    host_probe["warmed_floor_ms"] = round(floor * 1000, 1)
-    bad = [
-        k
-        for k, lim in host_probe["healthy_bands"].items()
-        if isinstance(host_probe.get(k), (int, float)) and host_probe[k] > lim
-    ]
-    # Three-way verdict (round-13 recalibration): a window whose ONLY
-    # excursion is a warmed floor in (HEALTHY, WORKABLE] is
-    # "jvm_degraded" — JVM-dispatch-path-only degradation, which
-    # penalizes Spark's side of the live ratio exclusively, so the bar
-    # below stays one-sidedly evaluable on it. Anything worse (python or
-    # DuckDB probe over band, or floor past WORKABLE) is hard-degraded.
-    floor_ms = host_probe["warmed_floor_ms"]
-    # ADVICE r13: a raised-and-swallowed duck_scan_ms leaves None, which
-    # the over-band check skips — without this branch the verdict could
-    # read "ok"/"jvm_degraded" on a window with no DuckDB evidence.
-    if host_probe.get("duck_scan_ms") is None:
-        host_probe["verdict"] = "degraded:duck_error"
-    elif bad == ["warmed_floor_ms"] and floor_ms <= WARMED_FLOOR_WORKABLE_MS:
-        host_probe["verdict"] = "jvm_degraded:warmed_floor_ms"
-    elif bad:
-        host_probe["verdict"] = "degraded:" + ",".join(bad)
-    else:
-        host_probe["verdict"] = "ok"
+    # numbers measure the machine-day and the bar below is recorded as
+    # not-evaluable.
+    host_probe["verdict"] = hp.verdict(host_probe)
     print(f"# host_probe: {json.dumps(host_probe)}", file=sys.stderr)
-    if host_probe["verdict"].startswith("degraded") and os.environ.get(
-        "SPARK_GRAFT_REQUIRE_HEALTHY"
-    ) == "1":
-        print(json.dumps({"metric": "host_probe_refused", **host_probe}))
-        spark.stop()
-        sys.exit(3)
+    refuse_if_degraded(host_probe, spark)
 
     timings: dict[str, float] = {}
-    jobs: dict[str, int] = {}
+    layers: dict[str, dict] = {}
     for name in HEADLINE:
         fn = registry[name].spark_fn
         # Materialize via Arrow (toPandas): the client-transfer path that
@@ -354,15 +241,12 @@ def main() -> None:
             fn(spark, sf_dir).toPandas()
             samples.append(time.perf_counter() - t0)
         timings[name] = round(statistics.median(samples), 4)
-        # Job composition of THIS session's plan (AQE state, split size
-        # and shuffle sizing as configured above) — one extra untimed
-        # run bracketed by sentinel jobs; feeds the adjusted marginal
-        # band in BENCH_DETAIL (VERDICT r10 item 2).
-        jobs[name] = count_jobs(
-            spark, lambda: fn(spark, sf_dir).toPandas()
-        )
+        # What THIS session's plan did (AQE state, split size and shuffle
+        # sizing as configured above): one extra untimed run, read from
+        # the status store.
+        layers[name] = measure(spark, lambda: fn(spark, sf_dir))
         print(
-            f"# {name}: {timings[name]:.3f}s jobs={jobs[name]}",
+            f"# {name}: {timings[name]:.3f}s jobs={layers[name]['jobs']}",
             file=sys.stderr,
         )
 
@@ -410,23 +294,10 @@ def main() -> None:
     hist = DUCKDB_MS_SF01 if sf == 0.1 else {}
     detail = {}
     for name, t in timings.items():
-        # Adjusted marginal band (VERDICT r10 item 2, machine-readable):
-        # marginal minus (jobs-1) x the dispatch-study probe-job bracket
-        # [27, 42] ms — the band of engine work left once the extra
-        # serialized job levels the single-floor subtraction misses are
-        # accounted for. A band at/below zero means the query is fully
-        # dispatch-composition-bound at this SF (jobs can also overlap,
-        # so even the low-end per-job estimate can over-subtract). The
-        # round-11 perf bar reads: anchor inside-or-above this band.
-        extra = max(0, jobs.get(name, 1) - 1)
-        row: dict[str, float] = {
+        row: dict = {
             "wall_sec": t,
             "marginal_sec": marginal[name],
-            "jobs": jobs.get(name),
-            "adjusted_marginal_band_sec": [
-                round(marginal[name] - extra * JOB_MS_HI / 1000.0, 4),
-                round(marginal[name] - extra * JOB_MS_LO / 1000.0, 4),
-            ],
+            "layers": layers[name],
         }
         if name in live_anchor:
             d = live_anchor[name]
@@ -438,16 +309,6 @@ def main() -> None:
             row["duckdb_hist_sec"] = d
             row["wall_ratio_hist"] = round(t / d, 2)
             row["marginal_ratio_hist"] = round(marginal[name] / d, 2)
-            # The round-11 bar, evaluated in place: the hist anchor vs
-            # the adjusted band. "above" = anchor exceeds even the
-            # band's high end (Spark's residual engine work beats the
-            # oracle); "inside" = parity within the dispatch bracket's
-            # uncertainty; "below" = a real residual engine gap the job
-            # accounting does NOT explain away.
-            lo, hi = row["adjusted_marginal_band_sec"]
-            row["hist_anchor_vs_adjusted_band"] = (
-                "above" if d >= hi else ("inside" if d >= lo else "below")
-            )
         detail[name] = row
 
     suite_wall = round(sum(timings.values()), 4)
@@ -475,7 +336,7 @@ def main() -> None:
         "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
         "effective_parallelism": spark.sparkContext.defaultParallelism,
         "shuffle_partitions": shuffle,
-        "split_bytes": int(split),
+        "split_bytes": SPLIT_BYTES,
     }
     # Ratio key regimes (VERDICT r7 item 4): the _hist ratios come FIRST
     # and `suite_wall_ratio` aliases the hist reading — rounds 1-6
@@ -511,23 +372,15 @@ def main() -> None:
         # so downstream comparisons can reject cross-regime deltas.
         result.setdefault("suite_wall_ratio_basis", "live")
 
-    # Round-13 bar (VERDICT r12 item 1): evaluated on LIVE same-process
-    # DuckDB anchors, gated by the recalibrated host probe. Round 11
-    # proved the fixed 2026-08-13 hist anchors measure machine-days, not
-    # the engine; the live anchors share the window's degradation with
-    # Spark, so their ratio is the machine-invariant reading. Thresholds
-    # unchanged from bar_r12 (see bar_reading). bar_r13 is the
-    # unexcluded continuity series; bar_r14 is the round-14 reading with
-    # json_get EXCLUDED as a named engine constant (BASELINE.md round-14
-    # addendum: Jackson-vs-vectorized JSON parse throughput on an
-    # already-minimal 1-job plan, A/B'd and refused twice, gap amortizes
-    # with scale — 31.9x at 10x, 21.7x at 100x). The exclusion is
-    # machine-readable here rather than silently baked into thresholds.
+    # The bar (VERDICT r12 item 1), evaluated on LIVE same-process
+    # DuckDB anchors and gated by the host probe. Round 11 proved the
+    # fixed 2026-08-13 hist anchors measure machine-days, not the
+    # engine; the live anchors share the window's degradation with
+    # Spark, so their ratio is the machine-invariant reading. The key
+    # keeps its round-14 name, which VERDICT.md and OPTIMIZATION_r14/r15
+    # cite.
     result["host_probe_verdict"] = host_probe["verdict"]
-    result["bar_r13"] = bar_reading(marginal, live_anchor, host_probe["verdict"])
-    result["bar_r14"] = bar_reading(
-        marginal, live_anchor, host_probe["verdict"], exclude=("json_get",)
-    )
+    result["bar_r14"] = bar_reading(marginal, live_anchor, host_probe["verdict"])
 
     here = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(here, "BENCH_DETAIL.json"), "w") as f:
@@ -536,7 +389,6 @@ def main() -> None:
                 **result,
                 "host_probe": host_probe,
                 "queries_marginal": marginal,
-                "probe_job_bracket_ms": [JOB_MS_LO, JOB_MS_HI],
                 "queries_detail": detail,
                 # ADVICE r7: make the anchor methodology attributable.
                 # The live DuckDB anchors are timed sequentially AFTER

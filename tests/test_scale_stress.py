@@ -488,66 +488,3 @@ def test_rake_phrase_islands_10x(spark, duck_big, big_dir):
     ids stay doc-local and the top-10 tie-break (count desc, phrase)
     is total, so the ranking hash-matches."""
     oracle_parity_10x(spark, duck_big, big_dir, "text_rake_keyword_lite")
-
-
-@pytest.mark.slow
-def test_concurrent_submission_pipelines_the_dispatch_floor():
-    """The serial bench pays the full per-query dispatch floor end to
-    end; a serving/cluster deployment submits queries concurrently and
-    the floor components overlap (BASELINE round-9 study: 5.7x
-    pipelining at sf0.1, concurrent suite makespan within 2x of
-    DuckDB's). Pin the property, not the machine: concurrent makespan
-    must beat serial by >2x with identical per-query row counts.
-    Subprocess-isolated (the study mutates session confs)."""
-    import json as _json
-    import os as _os
-    import subprocess as _sp
-    import sys as _sys
-
-
-    root = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    out = _sp.run(
-        [
-            _sys.executable,
-            _os.path.join(root, "tools", "concurrency_study.py"),
-            "--sf",
-            "/root/testdata/sf0.01",
-        ],
-        capture_output=True,
-        text=True,
-        timeout=600,
-        cwd=root,
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    result = _json.loads(out.stdout.strip().splitlines()[-1])
-    # Row-count equality is the hard CORRECTNESS check and runs at any
-    # core count — only the timing-factor assertions below are gated,
-    # because they measure machine behavior (round-10 ADVICE + review).
-    assert result["rowcounts_equal"], result["mismatched"]
-    if (_os.cpu_count() or 0) < 8:
-        pytest.skip(
-            "row counts verified; pipelining factors need >= 8 cores"
-        )
-    # At sf0.01 every query is floor-dominated, so pipelining is at its
-    # strongest — a factor this low would mean submission no longer
-    # overlaps at all (the regression this test exists to catch).
-    # 1.2x (not the typical ~4-5x) so a busy CI host cannot flake the
-    # suite; a true overlap regression reads ~1.0x. The measured factor
-    # is emitted as a warning (round-10 ADVICE: the loose CI floor must
-    # not silently hide a PARTIAL regression, e.g. 4x -> 1.5x), so the
-    # pytest warning summary carries the number every run; the bench
-    # artifact record lives in BASELINE.md's concurrency-study JSON.
-    import warnings as _warnings
-
-    _warnings.warn(
-        "concurrency pipelining_factor="
-        f"{result['pipelining_factor']} (duckdb "
-        f"{result['duckdb_pipelining_factor']}); typical ~4-5x, CI "
-        "floor 1.2x",
-        stacklevel=1,
-    )
-    assert result["pipelining_factor"] > 1.2, result
-    # DuckDB's side must have run the FULL suite with sane results —
-    # an engine whose concurrent makespan beats a 32-core serial pass
-    # by 10x would mean the comparison harness broke, not the engine.
-    assert 0.2 < result["duckdb_pipelining_factor"] < 10.0, result

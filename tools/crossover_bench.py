@@ -7,7 +7,8 @@ Spark's scans actually parallelize (lineitem = 60 input tasks) and the
 measurement separates engine throughput from the fixture-shape floor
 documented in BASELINE.md. Both engines run the same logical query
 (the registry plan vs its DuckDB oracle SQL), 2 warm-up passes, then
-median-of-3 per query.
+median-of-3 per query; each query's row also carries the ``layers``
+record of one extra, untimed Spark run (etl_intraday_bidask_spark.metrics).
 
 Usage: python tools/crossover_bench.py   (results: one JSON line)
 Findings recorded in BASELINE.md "Single-node crossover at 10x".
@@ -30,21 +31,6 @@ SF_BASE = "/root/testdata/sf0.1"
 # 10x (~sf1) by default; SPARK_GRAFT_CROSSOVER_REP=100 reproduces the
 # ~sf10 crossover measurement recorded in BASELINE.md.
 N_REP = int(os.environ.get("SPARK_GRAFT_CROSSOVER_REP", "10"))
-HEADLINE = [
-    "agg_pricing_summary",
-    "join_broadcast_dims",
-    "win_topk_per_group",
-    "stream_tumbling_1h",
-    "stream_session_30m",
-    "agg_rollup",
-    "json_get",
-    "array_explode_tokens",
-    "knn_cosine_topk",
-    "join_asof_bidask",
-    "text_tfidf_topk",
-]
-
-
 def generate(big: str) -> None:
     """10x replication with consistent key offsets (joins stay valid
     per replica) and splittable 100k-row row groups."""
@@ -91,6 +77,8 @@ def generate(big: str) -> None:
 
 
 def main() -> None:
+    from bench import HEADLINE
+    from etl_intraday_bidask_spark.metrics import measure
     from etl_intraday_bidask_spark.registry import load_all_operators
     from etl_intraday_bidask_spark.session import build_spark
     from etl_intraday_bidask_spark.tables import TABLE_NAMES
@@ -99,12 +87,7 @@ def main() -> None:
     # Round-13 (VERDICT r12 item 5): embed the pre-flight host probe in
     # the artifact so every crossover reading self-labels its window the
     # way bench.py runs do.
-    probe = {"py_loop_ms": round(hp.py_loop_ms(), 1)}
-    try:
-        probe["duck_scan_ms"] = round(hp.duck_scan_ms(), 1)
-    except Exception as ex:
-        probe["duck_scan_ms"] = None
-        probe["duck_error"] = type(ex).__name__
+    probe = hp.preflight()
 
     big = tempfile.mkdtemp(prefix="sf1_crossover_")
     generate(big)
@@ -128,40 +111,9 @@ def main() -> None:
             reg[n].spark_fn(spark, big).toPandas()
             con.sql(reg[n].oracle_sql).fetchall()
 
-    # Warmed dispatch floor for the probe (same leg as bench.py).
-    floor_samples = []
-    for _ in range(15):
-        t0 = time.perf_counter()
-        spark.range(1).count()
-        floor_samples.append(time.perf_counter() - t0)
-    probe["warmed_floor_ms"] = round(
-        statistics.median(floor_samples) * 1000, 1
-    )
-    bad = [
-        k
-        for k, lim in (
-            ("py_loop_ms", hp.HEALTHY["py_loop_ms"]),
-            ("duck_scan_ms", hp.HEALTHY["duck_scan_ms"]),
-            # Shared with bench.py via host_probe (ADVICE r13): a
-            # recalibration lands in ONE place for both probes.
-            ("warmed_floor_ms", hp.WARMED_FLOOR_HEALTHY_MS),
-        )
-        if isinstance(probe.get(k), (int, float)) and probe[k] > lim
-    ]
-    # ADVICE r13: a failed DuckDB probe leg must degrade the verdict —
-    # excluding the None from the over-band check alone would let the
-    # verdict read "ok" with no DuckDB evidence for the window.
-    if probe.get("duck_scan_ms") is None:
-        probe["verdict"] = "degraded:duck_error"
-    elif (
-        bad == ["warmed_floor_ms"]
-        and probe["warmed_floor_ms"] <= hp.WARMED_FLOOR_WORKABLE_MS
-    ):
-        probe["verdict"] = "jvm_degraded:warmed_floor_ms"
-    elif bad:
-        probe["verdict"] = "degraded:" + ",".join(bad)
-    else:
-        probe["verdict"] = "ok"
+    # Warmed dispatch floor and verdict: the same leg and rule as bench.py.
+    probe["warmed_floor_ms"] = hp.warmed_floor_ms(spark)
+    probe["verdict"] = hp.verdict(probe)
     print(f"# host_probe: {json.dumps(probe)}", file=sys.stderr, flush=True)
 
     out = {}
@@ -178,6 +130,8 @@ def main() -> None:
         out[n] = {
             "spark_ms": round(statistics.median(st) * 1000, 1),
             "duckdb_ms": round(statistics.median(dt) * 1000, 1),
+            # one more, untimed run: stages, GC and spill of this plan
+            "layers": measure(spark, lambda: reg[n].spark_fn(spark, big)),
         }
         print(n, out[n], file=sys.stderr, flush=True)
     sw = sum(v["spark_ms"] for v in out.values())

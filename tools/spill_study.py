@@ -33,16 +33,14 @@ difference is driver (== local-mode executor) memory:
   c) join_sortmerge: self-join on the key with broadcast disabled —
                      both SMJ sort children under pressure at once.
 
-Per-workload spill bytes come from the local REST status API
-(/api/v1/applications/<id>/stages), the same AppStatusStore a cluster
-history server exposes (polled until stable — the listener bus is
-async). Each child prints one JSON line; the parent asserts the
-fingerprints are identical across memory settings and emits the
-combined record for BASELINE.md. sort_global's fingerprint includes
-an explicit sortedness proof (zero within-partition inversions +
-non-overlapping range-partition bounds) computed in an untimed
-verification re-sort, so its spill delta includes that second sort's
-spill; walls time only the core action.
+Each workload runs once under etl_intraday_bidask_spark.metrics.measure,
+so its wall and spill bytes come from its own record, read from the
+status store for that action's job group alone. Each child prints one
+JSON line; the parent asserts the fingerprints are identical across
+memory settings and emits the combined record for BASELINE.md.
+sort_global's fingerprint includes an explicit sortedness proof (zero
+within-partition inversions + non-overlapping range-partition bounds)
+computed in an untimed verification re-sort after the measured one.
 
 Usage: python tools/spill_study.py          (one JSON line on stdout)
        SPARK_GRAFT_SPILL_ROWS=2000000 ...   (scaled-down, for tests)
@@ -55,8 +53,6 @@ import os
 import subprocess
 import sys
 import tempfile
-import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -87,38 +83,12 @@ def generate(d: str) -> None:
     con.close()
 
 
-def _spill_totals(ui: str, app_id: str) -> tuple[int, int]:
-    """Cumulative spill bytes across all stages, polled until two
-    consecutive reads agree: task-end events flow through the async
-    AppStatusListener bus, so a read taken immediately after collect()
-    can miss the just-finished stage and mis-attribute its spill to
-    the next workload's delta (round-7 review finding)."""
-
-    def read() -> tuple[int, int]:
-        stages = json.load(
-            urllib.request.urlopen(
-                f"{ui}/api/v1/applications/{app_id}/stages"
-            )
-        )
-        return (
-            sum(s["memoryBytesSpilled"] for s in stages),
-            sum(s["diskBytesSpilled"] for s in stages),
-        )
-
-    prev = read()
-    for _ in range(20):
-        time.sleep(0.5)
-        cur = read()
-        if cur == prev:
-            return cur
-        prev = cur
-    return prev
-
-
 def child(mem: str, data_dir: str) -> None:
     """Run the three workloads in THIS process's fresh JVM at `mem`."""
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
+
+    from etl_intraday_bidask_spark.metrics import measure
 
     spark = (
         SparkSession.builder.master(f"local[{CORES}]")
@@ -130,34 +100,27 @@ def child(mem: str, data_dir: str) -> None:
         # partition layout identical across the two memory settings.
         .config("spark.sql.adaptive.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .config("spark.ui.enabled", "true")
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
 
     fact = spark.read.parquet(f"{data_dir}/spill_fact.parquet")
     fact.count()  # warm: JIT + page-cache the input once
 
-    def sort_global():
-        t0 = time.perf_counter()
-        (
-            fact.orderBy("payload")
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-        wall = time.perf_counter() - t0
-        # Verification pass (untimed — runs after the timed sort):
-        # prove the spilled sort actually SORTED. Output partitions of
-        # an orderBy are range-ordered and monotonically_increasing_id
-        # preserves within-partition row order, so sortedness ==
-        # zero within-partition inversions + non-overlapping partition
-        # [min, max] ranges in pid order. A content-only fingerprint
-        # would be vacuously identical even if the external-sort merge
-        # scrambled row order (round-7 review finding).
+    def noop_sink(df):
+        df.write.format("noop").mode("overwrite").save()
+        return []
+
+    def verify_sorted():
+        """Prove the spilled sort actually SORTED (untimed, after the
+        measured sort). Output partitions of an orderBy are
+        range-ordered and monotonically_increasing_id preserves
+        within-partition row order, so sortedness == zero
+        within-partition inversions + non-overlapping partition [min,
+        max] ranges in pid order. A content-only fingerprint would be
+        vacuously identical even if the external-sort merge scrambled
+        row order (round-7 review finding)."""
         from pyspark.sql import Window
 
         rows = fact.orderBy("payload").select(
@@ -196,50 +159,45 @@ def child(mem: str, data_dir: str) -> None:
         )
         n = sum(r["n"] for r in ranges)
         h = sum(r["h"] for r in ranges)
-        return wall, (n, h, "sorted")
+        return n, h, "sorted"
 
     def agg_highcard():
-        t0 = time.perf_counter()
-        r = (
+        return (
             fact.groupBy("k")
             .agg(F.max("payload").alias("mx"))
             .agg(
                 F.count(F.lit(1)).alias("n"),
                 F.sum(F.hash("k", "mx")).alias("h"),
             )
-            .collect()[0]
         )
-        return time.perf_counter() - t0, (r["n"], r["h"])
 
     def join_sortmerge():
-        t0 = time.perf_counter()
         right = fact.groupBy("k").agg(F.min("payload").alias("canon"))
-        r = (
-            fact.join(right, "k")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.hash("k", "payload", "canon")).alias("h"),
-            )
-            .collect()[0]
+        return fact.join(right, "k").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.hash("k", "payload", "canon")).alias("h"),
         )
-        return time.perf_counter() - t0, (r["n"], r["h"])
+
+    got: list = []
+
+    def collect(df):
+        got[:] = df.collect()
+        return got
 
     out: dict = {"mem": mem}
-    prev = _spill_totals(ui, app_id)
-    for name, fn in (
-        ("sort_global", sort_global),
-        ("agg_highcard", agg_highcard),
-        ("join_sortmerge", join_sortmerge),
+    for name, build, action in (
+        ("sort_global", lambda: fact.orderBy("payload"), noop_sink),
+        ("agg_highcard", agg_highcard, collect),
+        ("join_sortmerge", join_sortmerge, collect),
     ):
-        wall, fp = fn()
-        cur = _spill_totals(ui, app_id)
+        rec = measure(spark, build, action)
+        fp = verify_sorted() if name == "sort_global" else (got[0]["n"], got[0]["h"])
         out[name] = {
-            "wall_sec": round(wall, 3),
-            "mem_spilled_mb": round((cur[0] - prev[0]) / 1e6, 1),
-            "disk_spilled_mb": round((cur[1] - prev[1]) / 1e6, 1),
+            "wall_sec": round((rec["build_ms"] + rec["collect_ms"]) / 1000, 3),
+            "mem_spilled_mb": round(rec["mem_spill_bytes"] / 1e6, 1),
+            "disk_spilled_mb": round(rec["disk_spill_bytes"] / 1e6, 1),
             "fingerprint": list(fp),
         }
-        prev = cur
     spark.stop()
     print("SPILL_CHILD " + json.dumps(out))
 
